@@ -13,6 +13,9 @@ recomposed as ONE set-oriented DataFrame program:
 
 Registry tables are dimension-sized at any real scale -> both joins
 broadcast; the only data-sized object in the plan is the files table.
+The registry dimensions compile into the plan as local relations
+(sources/registry.py builds them from typed Arrow tables), so the
+broadcast side is read in the driver, not scanned by tasks.
 Everything up to dispatch is pure column expressions (codegen'd,
 zero Python), which is why the same pipeline holds at 100 TB of files.
 """
@@ -456,12 +459,55 @@ def _cli_shim_source() -> str:
     )
 
 
+def run_commands(
+    commands: list[str], shim_source: str, prefix: str, check: bool
+) -> list:
+    """Run rendered cli command lines through ``sh -c``, concurrently,
+    with the ``csvx`` shim first on PATH; returns the CompletedProcess
+    of each command in input order. The shim lives in a temp dir that
+    is created only when there are commands and removed on return.
+    With ``check`` a nonzero exit raises CalledProcessError."""
+    import os
+    import shutil
+    import subprocess
+    import tempfile
+    from concurrent.futures import ThreadPoolExecutor
+
+    if not commands:
+        return []
+    shim_dir = tempfile.mkdtemp(prefix=prefix)
+    try:
+        shim = os.path.join(shim_dir, "csvx")
+        with open(shim, "w") as fh:
+            fh.write(shim_source)
+        os.chmod(shim, 0o755)
+        env = dict(os.environ)
+        env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
+
+        def run(command: str):
+            return subprocess.run(
+                ["/bin/sh", "-c", command],
+                capture_output=True,
+                text=True,
+                env=env,
+                check=check,
+            )
+
+        with ThreadPoolExecutor(len(os.sched_getaffinity(0))) as pool:
+            return list(pool.map(run, commands))
+    finally:
+        shutil.rmtree(shim_dir, ignore_errors=True)
+
+
 def execute_dispatched(dispatched: DataFrame) -> DataFrame:
     """Execute a dispatch-ready relation (file_id, method, setup,
     rendered): python rows by in-process dynamic invocation, cli rows
     by subprocess — the shared A15/A16/EP2 execution stage used by the
     batch query (extract_run) and its streaming twin
-    (stream_extract_run)."""
+    (stream_extract_run). A batch's per-file cli commands run
+    concurrently (``run_commands``, one thread per usable CPU), and
+    their output rows keep the batch's input order; a command that
+    exits nonzero fails the task."""
     from metadata_extractors_api_spark.plans.extractors_fixture import (
         execute_python_call,
     )
@@ -481,27 +527,12 @@ def execute_dispatched(dispatched: DataFrame) -> DataFrame:
             )
 
     def run_cli(batches):
-        import os
-        import subprocess
-        import tempfile
-
-        shim_dir = tempfile.mkdtemp(prefix="mdx_cli_shim_")
-        shim = os.path.join(shim_dir, "csvx")
-        with open(shim, "w") as fh:
-            fh.write(shim_source)
-        os.chmod(shim, 0o755)
-        env = dict(os.environ)
-        env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
         for pdf in batches:
             out = []
-            for fid, rendered in zip(pdf["file_id"], pdf["rendered"]):
-                res = subprocess.run(
-                    ["/bin/sh", "-c", rendered],
-                    capture_output=True,
-                    text=True,
-                    env=env,
-                    check=True,
-                )
+            results = run_commands(
+                list(pdf["rendered"]), shim_source, "mdx_cli_shim_", check=True
+            )
+            for fid, res in zip(pdf["file_id"], results):
                 for line in res.stdout.splitlines():
                     ch, pt, val = line.split(",")
                     out.append((fid, "cli", ch, int(pt), float(val)))
@@ -817,6 +848,12 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     todo = paired.select(
         "extractor_id", "file_id", "method", "setup", rendered.alias("rendered")
     )
+    # Imported in the driver: the closure ships it to the workers by
+    # value, so they need not import the package.
+    from metadata_extractors_api_spark.plans.extractors_fixture import (
+        execute_python_call,
+    )
+
     shim_source = _cli_shim_source()
 
     def _valid(rows) -> bool:
@@ -831,23 +868,13 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     def run_sweep(batches):
-        import os
-        import subprocess
-        import tempfile
-
-        from metadata_extractors_api_spark.plans.extractors_fixture import (
-            execute_python_call,
-        )
-
-        shim_dir = tempfile.mkdtemp(prefix="mdx_sweep_shim_")
-        shim = os.path.join(shim_dir, "csvx")
-        with open(shim, "w") as fh:
-            fh.write(shim_source)
-        os.chmod(shim, 0o755)
-        env = dict(os.environ)
-        env["PATH"] = shim_dir + os.pathsep + env.get("PATH", "")
         for pdf in batches:
             out = []
+            is_cli = pdf["method"] != "python"
+            cli_results = iter(run_commands(
+                list(pdf["rendered"][is_cli]), shim_source, "mdx_sweep_shim_",
+                check=False,
+            ))
             for eid, method, setup, rendered in zip(
                 pdf["extractor_id"], pdf["method"], pdf["setup"], pdf["rendered"]
             ):
@@ -858,12 +885,7 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                     except Exception:
                         status = "error"
                 else:
-                    res = subprocess.run(
-                        ["/bin/sh", "-c", rendered],
-                        capture_output=True,
-                        text=True,
-                        env=env,
-                    )
+                    res = next(cli_results)
                     if res.returncode != 0:
                         status = "error"
                     else:

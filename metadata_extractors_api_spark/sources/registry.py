@@ -13,7 +13,11 @@ identical registry content.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
+
 from metadata_extractors_api_spark.catalog import session_key
 
 # --- fixture literals -------------------------------------------------------
@@ -126,10 +130,20 @@ _DF_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 
 def _memo(spark: SparkSession, name: str, rows, schema: str) -> DataFrame:
+    """The fixture rows as a DataFrame of the declared schema. Built
+    from a pyarrow Table typed by that schema, so the frame is a
+    LocalRelation whose rows live in the plan itself (a broadcast of it
+    is collected in the driver) rather than an RDD of pickled slices
+    that every query re-scans in tasks."""
     key = (session_key(spark), name)
     df = _DF_MEMO.get(key)
     if df is None:
-        df = spark.createDataFrame(rows, schema)
+        struct = StructType.fromDDL(schema)
+        table = pa.Table.from_pylist(
+            [dict(zip(struct.names, row)) for row in rows],
+            schema=to_arrow_schema(struct),
+        )
+        df = spark.createDataFrame(table)
         _DF_MEMO[key] = df
     return df
 

@@ -93,7 +93,9 @@ def _events_stream_batched(
     spark: SparkSession, sf_dir: str, n_files: int = 3,
     single_trigger: bool = False,
 ) -> DataFrame:
-    """Events as a genuinely MULTI-micro-batch file stream.
+    """Events as a file stream split into ``n_files`` parts: by default
+    drained as ``n_files`` micro-batches, or as one with
+    ``single_trigger=True``.
 
     The fixture ships events as ONE parquet file, so an availableNow
     drain of ``_events_stream`` runs exactly one micro-batch and
@@ -101,12 +103,12 @@ def _events_stream_batched(
     every stateful fold was dead code (round 5 found a latent
     TypeError there: ``state.get()`` called the property's tuple).
     This helper splits events into ``n_files`` time-contiguous parquet
-    files with strictly increasing modification times and streams them
-    with ``maxFilesPerTrigger=1``: the drain runs ``n_files``
-    micro-batches in event-time order and per-key state is genuinely
-    revisited, so the stateful queries exercise the path their
-    docstrings claim. Time-contiguous (not round-robin) chunks keep
-    event-time monotone across batches -- the arrival order a
+    files with strictly increasing modification times. By default it
+    streams them with ``maxFilesPerTrigger=1``: the drain runs
+    ``n_files`` micro-batches in event-time order and per-key state is
+    genuinely revisited, so a query built on the default drain
+    exercises its cross-batch path. Time-contiguous (not round-robin)
+    chunks keep event-time monotone across batches -- the arrival order a
     continuous production stream actually has, and the assumption the
     EWMA fold documents.
 

@@ -135,3 +135,139 @@ def test_template_override_applies_to_all_fields(spark):
     )
     assert out["rendered"] == "csvx /override/in.csv /data/table.json"
     assert out["output_path"] == "/data/table.json"
+
+
+def _as_literal(v):
+    """A collected value in the fixture literals' shape: structs as
+    tuples, arrays as lists, maps as dicts."""
+    from pyspark.sql import Row
+
+    if isinstance(v, Row):
+        return tuple(_as_literal(x) for x in v)
+    if isinstance(v, list):
+        return [_as_literal(x) for x in v]
+    return v
+
+
+def test_registry_frames_are_local_relations(spark):
+    """Every registry fixture frame compiles into the plan as a
+    LocalRelation of the declared schema and collects to exactly the
+    fixture literals, nested maps and None values included."""
+    from pyspark.sql.types import StructType
+
+    frames = [
+        (reg.filetypes_df, reg.FILETYPES, reg.FILETYPES_SCHEMA),
+        (reg.extractors_df, reg.EXTRACTORS, reg.EXTRACTORS_SCHEMA),
+        (reg.files_df, reg.FILES, reg.FILES_SCHEMA),
+        (reg.filetypes_b_df, reg.FILETYPES_B, reg.FILETYPES_SCHEMA),
+        (reg.extractors_b_df, reg.EXTRACTORS_B, reg.EXTRACTORS_SCHEMA),
+    ]
+    for build, rows, ddl in frames:
+        df = build(spark)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.nodeName() == "LocalRelation", build.__name__
+        assert df.schema == StructType.fromDDL(ddl), build.__name__
+        assert [_as_literal(r) for r in df.collect()] == rows, build.__name__
+
+
+def test_cli_batch_runs_concurrently_in_order(spark, tmp_path):
+    """A one-partition manifest of 20 cli files: the batch's commands
+    run concurrently, yet every file yields its 15 rows, in manifest
+    order, and the exact sums match the manifest-derived values."""
+    import pandas as pd
+
+    from metadata_extractors_api_spark.plans.extract_batch import (
+        execute_dispatched,
+    )
+    from metadata_extractors_api_spark.plans.extractors_fixture import (
+        EXTRACT_CHANNELS,
+        EXTRACT_POINTS,
+    )
+
+    # example-csv files (routed to the cli extractor) of varied path
+    # lengths in a non-sorted file_id order, plus orphans that drop out
+    manifest = [
+        ((i * 7) % 20 + 1, f"/data/{'d' * (i % 5)}/f{i}.csv", "example-csv", 1)
+        for i in range(20)
+    ] + [(1000 + i, f"/data/unknown{i}.bin", "orphan-type", 1) for i in range(2)]
+    path = str(tmp_path / "manifest.parquet")
+    pd.DataFrame(
+        manifest, columns=["file_id", "path", "filetype_id", "size_bytes"]
+    ).to_parquet(path)
+    files = spark.read.parquet(path)
+    assert files.rdd.getNumPartitions() == 1
+    dispatched = Engine(spark).extract_batch(files)
+    out = execute_dispatched(
+        dispatched.select("file_id", "method", "setup", "rendered")
+    ).collect()
+
+    cli = [(fid, p) for fid, p, ft, _ in manifest if ft == "example-csv"]
+    assert {r["method"] for r in out} == {"cli"}
+    assert [r["file_id"] for r in out] == [fid for fid, _ in cli for _ in range(15)]
+    assert all((4 * r["value"]).is_integer() for r in out)
+    expect = {
+        fid: sum(len(p) + pt + 0.25 * len(ch)
+                 for ch in EXTRACT_CHANNELS for pt in range(EXTRACT_POINTS))
+        for fid, p in cli
+    }
+    assert sum(r["value"] for r in out) == sum(expect.values())
+    assert sum(r["file_id"] * r["value"] for r in out) == sum(
+        fid * v for fid, v in expect.items()
+    )
+
+
+def test_cli_nonzero_exit_fails_the_task(spark):
+    """A cli command that exits nonzero still raises, through the
+    concurrent path, and fails the job."""
+    import subprocess
+
+    import pytest
+
+    from metadata_extractors_api_spark.plans.extract_batch import (
+        _cli_shim_source,
+        execute_dispatched,
+        run_commands,
+    )
+
+    with pytest.raises(subprocess.CalledProcessError):
+        run_commands(["true", "exit 3", "true"], _cli_shim_source(),
+                     "mdx_cli_shim_", check=True)
+    codes = run_commands(["true", "exit 3"], _cli_shim_source(),
+                         "mdx_cli_shim_", check=False)
+    assert [r.returncode for r in codes] == [0, 3]
+
+    bad = spark.createDataFrame(
+        [(1, "cli", "", "csvx /data/a.csv /data/a.json"),
+         (2, "cli", "", "exit 3")],
+        "file_id long, method string, setup string, rendered string",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="non-zero exit status 3"):
+        execute_dispatched(bad).collect()
+
+
+def test_cli_paths_leave_no_shim_dirs(spark, sf_dir):
+    """extract_run and extract_test_sweep remove the shim temp dirs
+    their tasks create. The sweep runs its cli pairs through the same
+    runner without check, so alt-extractor's missing ``altx`` binary
+    still lands in n_error."""
+    import glob
+    import os
+    import tempfile
+
+    def shim_dirs():
+        root = tempfile.gettempdir()
+        return {
+            d for prefix in ("mdx_cli_shim_", "mdx_sweep_shim_")
+            for d in glob.glob(os.path.join(root, prefix + "*"))
+        }
+
+    before = shim_dirs()
+    mdx.QUERIES["extract_run"](spark, sf_dir).collect()
+    sweep = {
+        r["extractor_id"]: r
+        for r in mdx.QUERIES["extract_test_sweep"](spark, sf_dir).collect()
+    }
+    assert shim_dirs() - before == set()
+    alt = sweep["alt-extractor"]
+    assert alt["n_pairs"] == alt["n_error"] == 3
+    assert sweep["csv-extract"]["n_pass"] == sweep["csv-extract"]["n_pairs"] == 2

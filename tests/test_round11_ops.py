@@ -6,12 +6,10 @@ here instead of showing up only as a bench-time regression."""
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import functions as F
 
 
-def test_stream_single_trigger_batch_invariance(spark, sf_dir):
+def test_stream_single_trigger_batch_invariance(spark, sf_dir, tmp_path):
     """The seven benched stream headliners drain their split source in
     ONE availableNow micro-batch (round-11 drain policy). Assert (a)
     the trigger policy really yields 1 vs n_files batches, and (b) a
@@ -26,13 +24,15 @@ def test_stream_single_trigger_batch_invariance(spark, sf_dir):
     )
 
     def drain_batches(single):
-        ev = _events_stream_batched(spark, sf_dir, single_trigger=single)
+        ev = _events_stream_batched(
+            spark, sf_dir, n_files=3, single_trigger=single
+        )
         seen = []
         q = (
             ev.writeStream.foreachBatch(
                 lambda df, bid: seen.append(int(bid))
             )
-            .option("checkpointLocation", tempfile.mkdtemp())
+            .option("checkpointLocation", str(tmp_path / f"ckpt_{single}"))
             .trigger(availableNow=True)
             .start()
         )
