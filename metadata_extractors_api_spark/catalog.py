@@ -10,6 +10,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from metadata_extractors_api_spark.store import memo
+
 TABLES = [
     "region",
     "nation",
@@ -112,24 +114,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
 
 
-def session_key(spark: SparkSession) -> str:
-    """Stable identity for per-session memo keys.
-
-    ``id(spark)`` is unsafe here: CPython reuses object ids after
-    garbage collection, so a later SparkSession in the same process
-    could be served another (dead) session's memoized temp-dir results
-    instead of recomputing (round-4 ADVICE item 2). The Spark
-    application id is monotone per JVM (timestamp-derived in local
-    mode, cluster-unique on YARN/K8s) and shared by sibling sessions
-    of one SparkContext -- which is the correct sharing granularity
-    for these memos: they cache temp-dir artifacts and registered
-    helpers that live with the JVM, not with the Python wrapper."""
-    return spark.sparkContext.applicationId
-
-
-# (session, sf_dir) pairs whose stats tables are already analyzed.
-_STATS_MEMO: set[tuple[str, str]] = set()
-
 #: relational tables worth CBO stats (events needs the legacy ns read
 #: path and the doc/embedding tables join on nothing).
 STATS_TABLES = [
@@ -150,17 +134,17 @@ def create_stats_tables(spark: SparkSession, sf_dir: str, db: str = "mdx_stats")
     session-scoped state, not an on-disk metastore. On a cluster this
     is the scheduled `ANALYZE TABLE ... COMPUTE STATISTICS` job that
     keeps CBO join-reordering and broadcast decisions honest as tables
-    grow. Returns the database name; memoized per (session, sf_dir)."""
-    key = (session_key(spark), sf_dir)
-    if key in _STATS_MEMO:
-        return db
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
-    for t in STATS_TABLES:
-        spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
-        spark.sql(
-            f"CREATE TABLE {db}.{t} USING PARQUET LOCATION '{sf_dir}/{t}.parquet'"
-        )
-        spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS")
-        spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR ALL COLUMNS")
-    _STATS_MEMO.add(key)
+    grow. Returns the database name; built once per (session, sf_dir, db)."""
+
+    def build() -> None:
+        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+        for t in STATS_TABLES:
+            spark.sql(f"DROP TABLE IF EXISTS {db}.{t}")
+            spark.sql(
+                f"CREATE TABLE {db}.{t} USING PARQUET LOCATION '{sf_dir}/{t}.parquet'"
+            )
+            spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS")
+            spark.sql(f"ANALYZE TABLE {db}.{t} COMPUTE STATISTICS FOR ALL COLUMNS")
+
+    memo(spark, ("stats_tables", sf_dir, db), build)
     return db

@@ -7,8 +7,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo
 
 
 @register(
@@ -122,10 +123,6 @@ def fn_try_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session-scoped memo for cache_reuse's persisted intermediate
-_CACHE_MEMO: dict[tuple[int, str], DataFrame] = {}
-
-
 @register(
     "cache_reuse",
     oracle="""
@@ -141,19 +138,17 @@ def cache_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch read columnar in-memory blocks instead of rescanning parquet.
     Oracle: both branches must equal direct aggregates over the source
     (see also test_cache_reuse_plan for the InMemoryTableScan shape).
-    The persisted intermediate is memoized
-    per (session, sf_dir): repeated invocations reuse ONE cached block
-    set instead of pinning a new copy each call."""
-    key = (session_key(spark), sf_dir)
-    base = _CACHE_MEMO.get(key)
-    if base is None:
-        li = load(spark, sf_dir, "lineitem")
-        base = (
-            li.filter(F.col("l_quantity") > 10)
-            .select("l_returnflag", "l_quantity", "l_extendedprice")
-            .persist()
-        )
-        _CACHE_MEMO[key] = base
+    The persisted intermediate is built once per (session, sf_dir):
+    repeated invocations reuse ONE cached block set instead of pinning
+    a new copy each call."""
+    base = memo(
+        spark,
+        ("cache_reuse", sf_dir),
+        lambda: load(spark, sf_dir, "lineitem")
+        .filter(F.col("l_quantity") > 10)
+        .select("l_returnflag", "l_quantity", "l_extendedprice")
+        .persist(),
+    )
     by_flag = base.groupBy("l_returnflag").agg(F.count("*").alias("n"))
     overall = base.agg(F.count("*").alias("n")).select(
         F.lit("ALL").alias("l_returnflag"), "n"

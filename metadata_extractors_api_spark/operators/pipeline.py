@@ -17,7 +17,6 @@ Scale design notes:
 
 from __future__ import annotations
 
-import tempfile
 from typing import Iterator
 
 import numpy as np
@@ -25,11 +24,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.operators.llm import (
     RRF_POOL,
     SCALE,
-    _ann_memo,
     _minhash_pairs_ctes,
     _rrf_fuse,
     _rrf_lex_ranked,
@@ -41,6 +39,7 @@ from metadata_extractors_api_spark.operators.llm import (
     tokens_col,
 )
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 SAMPLE_FRACTION = 0.2
 PACK_BUDGET = 2048  # tokens per packed context window
@@ -592,7 +591,7 @@ def _ivf_trained_index(spark: SparkSession, sf_dir: str):
         cent = _km_train(pts)
         assign = _km_assign(pts, cent).select("vec_id", "cluster")
         e = load(spark, sf_dir, "embeddings", parallelize=True)
-        path = tempfile.mkdtemp(prefix="mdx_ann_ivft_idx_")
+        path = scratch_dir("ann_ivft_idx_")
         (
             e.join(assign, "vec_id")
             .repartition("cluster")
@@ -620,10 +619,9 @@ def _ivf_trained_index(spark: SparkSession, sf_dir: str):
         )
         return {"path": path, "probe": probe, "emb": q["embedding"], "qn": q["nn"]}
 
-    st = _ann_memo((session_key(spark), sf_dir, "ivf_trained"), build)
-    idx_df = _ann_memo(
-        (session_key(spark), sf_dir, "ivf_trained_df"),
-        lambda: spark.read.parquet(st["path"]),
+    st = memo(spark, ("ann_ivf_trained", sf_dir), build)
+    idx_df = memo(
+        spark, ("ann_ivf_trained_df", sf_dir), lambda: spark.read.parquet(st["path"])
     )
     return st, idx_df
 
@@ -957,8 +955,8 @@ def _pq_oracle() -> str:
 def _pq_pts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings in PQ long format (vec_id, subspace, local dim, exact
     int64 coordinate), materialized once per (session, sf_dir)."""
-    return _ann_memo(
-        (session_key(spark), sf_dir, "pq_pts"), lambda: _pq_pts_build(spark, sf_dir)
+    return memo(
+        spark, ("ann_pq_pts", sf_dir), lambda: _pq_pts_build(spark, sf_dir)
     )
 
 
@@ -1040,9 +1038,8 @@ def sim_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     train-once / probe-many split sim_ann_ivf_trained applies, since a
     serving deployment persists the index and pays only the ADC scan
     per query."""
-    cent, codes = _ann_memo(
-        (session_key(spark), sf_dir, "pq_model"),
-        lambda: _pq_train(spark, sf_dir),
+    cent, codes = memo(
+        spark, ("ann_pq_model", sf_dir), lambda: _pq_train(spark, sf_dir)
     )
     pts = _pq_pts(spark, sf_dir)
     qd = (

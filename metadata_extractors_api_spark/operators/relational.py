@@ -14,13 +14,12 @@ products stay exact without hitting Spark's precision-loss fallback.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import scratch_dir
 
 
 def money(c: str) -> Column:
@@ -93,7 +92,7 @@ def sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     check, __init__.py:281-286). Oracle: the round-trip must equal a
     direct aggregate over the source -- the sink lost/duplicated
     nothing."""
-    out = tempfile.mkdtemp(prefix="mdx_sink_")
+    out = scratch_dir("sink_")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_quantity"
     )

@@ -6,14 +6,15 @@ surface a long-lived 100 TB lakehouse needs around the query engine.
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 
 @register(
@@ -30,7 +31,7 @@ def scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     union schema, old rows NULL-filled -- how a 100 TB table grows
     columns without rewriting history. Oracle: per-generation counts
     with the new column NULL-filled for generation 1."""
-    base = tempfile.mkdtemp(prefix="mdx_evo_")
+    base = scratch_dir("evo_")
     r = load(spark, sf_dir, "region")
     r.select("r_regionkey", "r_name").write.mode("overwrite").parquet(
         os.path.join(base, "gen=1")
@@ -68,11 +69,6 @@ _CSV_ORACLE = (
     """
 )
 
-# session-scoped memo: the parsed CSV must stay cached (the corrupt-
-# record column is filled during parsing), so keep ONE cached copy per
-# session instead of pinning a new one per invocation.
-_CSV_MEMO: dict[int, DataFrame] = {}
-
 
 @register("scan_csv_permissive", oracle=_CSV_ORACLE)
 def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -81,9 +77,12 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
     mismatch, §1.3; a 100 TB ingest quarantines instead). Returns the
     good/bad split; the oracle re-derives it from the same fixture rows
     with TRY_CAST rather than asserting constants."""
-    df = _CSV_MEMO.get(session_key(spark))
-    if df is None:
-        d = tempfile.mkdtemp(prefix="mdx_csv_")
+
+    # The parsed CSV must stay cached (the corrupt-record column is
+    # filled during parsing), so ONE cached copy is built per session
+    # instead of pinning a new one per invocation.
+    def build() -> DataFrame:
+        d = scratch_dir("csv_")
         path = os.path.join(d, "in.csv")
         with open(path, "w") as f:
             f.write("id,qty,price\n")
@@ -99,9 +98,9 @@ def scan_csv_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Spark requires referencing the corrupt-record column only
         # after caching (it is filled during parsing, not derivable
         # from a re-parse of projected columns).
-        df = df.cache()
-        _CSV_MEMO[session_key(spark)] = df
-    return df.agg(
+        return df.cache()
+
+    return memo(spark, "scan_csv_permissive", build).agg(
         F.count("*").cast("int").alias("total"),
         F.count("_corrupt_record").cast("int").alias("quarantined"),
     )
@@ -211,10 +210,6 @@ _JSONL_ORACLE = (
     """
 )
 
-# session-scoped memo: same parsing-time corrupt-column caching
-# constraint as _CSV_MEMO.
-_JSONL_MEMO: dict[int, DataFrame] = {}
-
 
 @register("scan_jsonl_corrupt", oracle=_JSONL_ORACLE)
 def scan_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -226,20 +221,22 @@ def scan_jsonl_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-row reject would discard salvageable text. The oracle
     re-derives the identical salvage rule from the same fixture lines
     with json_valid + TRY_CAST, so the parsing POLICY (not literal
-    counts) is what's checked."""
-    df = _JSONL_MEMO.get(session_key(spark))
-    if df is None:
-        d = tempfile.mkdtemp(prefix="mdx_jsonl_")
+    counts) is what's checked. Cached once per session, like
+    scan_csv_permissive: the corrupt column is filled during parsing."""
+
+    def build() -> DataFrame:
+        d = scratch_dir("jsonl_")
         path = os.path.join(d, "in.jsonl")
         with open(path, "w") as f:
             f.write("\n".join(_JSONL_LINES) + "\n")
-        df = (
+        return (
             spark.read.option("mode", "PERMISSIVE")
             .option("columnNameOfCorruptRecord", "_corrupt_record")
             .schema("id INT, name STRING, _corrupt_record STRING")
             .json(path)
         ).cache()
-        _JSONL_MEMO[session_key(spark)] = df
+
+    df = memo(spark, "scan_jsonl_corrupt", build)
     return df.select(
         "id", "name", F.col("_corrupt_record").alias("corrupt_raw")
     )
@@ -334,7 +331,7 @@ def scan_parquet_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost its own rows, never the job. Tolerance is a PER-READ data
     source option (not session conf), so it travels with the returned
     plan instead of leaking mutated session state."""
-    base = tempfile.mkdtemp(prefix="mdx_corrupt_")
+    base = scratch_dir("corrupt_")
     good_dir = os.path.join(base, "t")
     src = load(spark, sf_dir, "region")
     src.coalesce(1).write.mode("overwrite").parquet(good_dir)
@@ -478,7 +475,12 @@ def _csvq_oracle() -> str:
     """
 
 
-_CSVQ_DIR: list[str] = []
+@functools.cache
+def _csvq_dir() -> str:
+    d = scratch_dir("csvq_")
+    with open(os.path.join(d, "quoted.csv"), "w") as fh:
+        fh.write(_csvq_text())
+    return d
 
 
 @register("scan_csv_quoted", oracle=_csvq_oracle())
@@ -494,20 +496,12 @@ def scan_csv_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     NOT splittable (one task per file) — the docstringed trade is to
     keep multiline corpora as many medium files, which this fixture's
     one-file-per-scan shape mirrors."""
-    import os
-    import tempfile
-
-    if not _CSVQ_DIR:
-        d = tempfile.mkdtemp(prefix="mdx_csvq_")
-        with open(os.path.join(d, "quoted.csv"), "w") as fh:
-            fh.write(_csvq_text())
-        _CSVQ_DIR.append(d)
     df = (
         spark.read.option("header", True)
         .option("multiLine", True)
         .option("escape", '"')
         .schema("id BIGINT, description STRING, note STRING")
-        .csv(_CSVQ_DIR[0])
+        .csv(_csvq_dir())
     )
     return df.select(
         "id",
@@ -516,9 +510,6 @@ def scan_csv_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("description").cast("bigint").alias("n_chars"),
         F.col("description").contains("\n").alias("multiline"),
     )
-
-
-_CSVW_DIR: list[str] = []
 
 
 @register("sink_csv_roundtrip_quoted", oracle=_csvq_oracle())
@@ -531,21 +522,15 @@ def sink_csv_roundtrip_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NEXT consumer, which no write-side check catches). Shares
     scan_csv_quoted's oracle: the roundtripped relation must equal
     the original constants."""
-    import os
-    import tempfile
 
-    rows = [(i, d, n) for i, d, n in _CSVQ_ROWS]
-    # the fixture rows carry RFC-doubled quotes in the RAW file; the
-    # in-memory truth dequotes them (same transform the oracle states)
-    truth = [
-        (i, d.replace('""', '"'), n) for i, d, n in rows
-    ]
-    df = spark.createDataFrame(
-        truth, "id BIGINT, description STRING, note STRING"
-    )
-    if not _CSVW_DIR:
-        out = tempfile.mkdtemp(prefix="mdx_csvw_")
-        target = os.path.join(out, "written")
+    def build() -> str:
+        # the fixture rows carry RFC-doubled quotes in the RAW file; the
+        # in-memory truth dequotes them (same transform the oracle states)
+        truth = [(i, d.replace('""', '"'), n) for i, d, n in _CSVQ_ROWS]
+        df = spark.createDataFrame(
+            truth, "id BIGINT, description STRING, note STRING"
+        )
+        target = os.path.join(scratch_dir("csvw_"), "written")
         # the CSV WRITER trims whitespace by default
         # (ignore*WhiteSpace=true on write, false on read) — a
         # writer-only default that silently corrupts quoted padding;
@@ -555,13 +540,14 @@ def sink_csv_roundtrip_quoted(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).option("ignoreLeadingWhiteSpace", False).option(
             "ignoreTrailingWhiteSpace", False
         ).mode("overwrite").csv(target)
-        _CSVW_DIR.append(target)
+        return target
+
     back = (
         spark.read.option("header", True)
         .option("multiLine", True)
         .option("escape", '"')
         .schema("id BIGINT, description STRING, note STRING")
-        .csv(_CSVW_DIR[0])
+        .csv(memo(spark, "sink_csv_roundtrip_quoted", build))
     )
     return back.select(
         "id",

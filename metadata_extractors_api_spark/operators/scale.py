@@ -18,14 +18,14 @@ a runnable query so they are tested, not just described.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.operators.relational import dsum, money
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 
 @register(
@@ -50,7 +50,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Bucketed tables need the session catalog (bucket spec lives in
     # table metadata). Clear any stale table AND its leftover warehouse
     # directory: a fresh session does not know the table but the managed
-    # location can survive from a previous process.
+    # location can survive from a previous process that shared the
+    # warehouse (SPARK_GRAFT_WAREHOUSE).
     tag = "".join(c for c in sf_dir if c.isalnum())[-8:]
     lt, ot = f"li_b_{tag}", f"o_b_{tag}"
     for tbl, df, key in ((lt, li, "l_orderkey"), (ot, o, "o_orderkey")):
@@ -130,9 +131,9 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition value, so only that directory is listed/read
     (PartitionFilters in the plan). Partition column values survive the
     round-trip as directory keys."""
-    # mkdtemp per call (like every other sink query): a fixed shared
+    # a new dir per call (like every other sink query): a fixed shared
     # path lets two concurrent sessions race overwrite-vs-read.
-    out = os.path.join(tempfile.mkdtemp(prefix="mdx_part_sink_"), "t")
+    out = os.path.join(scratch_dir("part_sink_"), "t")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linestatus", "l_quantity", "l_returnflag"
     )
@@ -157,7 +158,7 @@ def sink_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-read files (one distributed DataFrame, no driver-side counts;
     only the writes are eager, as any sink is)."""
     src = load(spark, sf_dir, "region")
-    base = tempfile.mkdtemp(prefix="mdx_fmt_")
+    base = scratch_dir("fmt_")
     out = None
     for fmt in ("parquet", "json", "csv"):
         path = os.path.join(base, fmt)
@@ -213,7 +214,7 @@ def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    d = tempfile.mkdtemp(prefix="mdx_compact_")
+    d = scratch_dir("compact_")
     frag_path = os.path.join(d, "fragmented")
     comp_path = os.path.join(d, "compacted")
     o.repartition(64).write.mode("overwrite").parquet(frag_path)
@@ -487,12 +488,6 @@ def zorder_cluster_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# session-scoped memo of the partitioned fact layout for the DPP demo
-# (the write is setup, not the measured operation).
-_DPP_DIR_MEMO: dict[tuple[int, str], str] = {}
-_FIXEDWIDTH_MEMO: dict[tuple[int, str], str] = {}
-
-
 @register(
     "join_dpp",
     oracle="""
@@ -516,17 +511,18 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     the difference between scanning one date/tenant partition and
     scanning the table whenever the predicate arrives through a join,
     which is how real star-schema filters arrive. The partitioned
-    layout is session-memoized setup; the measured query is the join."""
-    key = (session_key(spark), sf_dir)
-    out = _DPP_DIR_MEMO.get(key)
-    if out is None:
-        out = os.path.join(tempfile.mkdtemp(prefix="mdx_dpp_"), "t")
+    layout is setup written once per session; the measured query is the
+    join."""
+
+    def build() -> str:
+        out = os.path.join(scratch_dir("dpp_"), "t")
         li = load(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_linestatus", "l_returnflag"
         )
         li.write.partitionBy("l_returnflag").mode("overwrite").parquet(out)
-        _DPP_DIR_MEMO[key] = out
-    fact = spark.read.parquet(out)
+        return out
+
+    fact = spark.read.parquet(memo(spark, ("join_dpp", sf_dir), build))
     dim = spark.createDataFrame(
         [("R", "returned"), ("A", "accepted"), ("N", "neither")],
         "flag string, label string",
@@ -558,7 +554,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integer-cents totals. Scale: format choice changes the
     scan/sink codec only; the plan (pushdown, pruning, partial
     aggregation) is identical to the parquet path."""
-    out = os.path.join(tempfile.mkdtemp(prefix="mdx_orc_"), "t")
+    out = os.path.join(scratch_dir("orc_"), "t")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -597,7 +593,7 @@ def sink_backfill_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the backfill fixed 'P' AND that the other partitions were not
     clobbered (static overwrite mode would have deleted them). The
     conf is scoped and restored."""
-    out = os.path.join(tempfile.mkdtemp(prefix="mdx_backfill_"), "t")
+    out = os.path.join(scratch_dir("backfill_"), "t")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -650,7 +646,7 @@ def sink_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the fixture, which is the contract this format requires --
     that constraint (and escaping newlines before writing) is the real
     operational caveat this query documents."""
-    out = os.path.join(tempfile.mkdtemp(prefix="mdx_text_"), "t")
+    out = os.path.join(scratch_dir("text_"), "t")
     d = load(spark, sf_dir, "documents").select("text")
     d.write.mode("overwrite").text(out)
     back = spark.read.text(out)
@@ -736,18 +732,16 @@ def scan_fixed_width(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.rpad(F.col("n_name"), 25, " "),
         F.lpad(F.col("n_regionkey").cast("string"), 2, "0"),
     )
-    # Memoized per (session, sf_dir) like _DPP_DIR_MEMO: repeated
-    # sweep/bench invocations reuse one rendered directory instead of
-    # leaking a fresh mkdtemp per call. session_key, not id(spark) —
-    # id() values can be recycled after a dead session is collected.
-    memo_key = (session_key(spark), os.path.abspath(sf_dir))
-    out = _FIXEDWIDTH_MEMO.get(memo_key)
-    if out is None or not os.path.isdir(out):
-        out = tempfile.mkdtemp(prefix="mdx_fixedwidth_") + "/nation_fw"
+
+    # repeated sweep/bench calls reuse one rendered directory
+    def build() -> str:
+        out = os.path.join(scratch_dir("fixedwidth_"), "nation_fw")
         n.select(line.alias("value")).coalesce(1).write.mode(
             "overwrite"
         ).text(out)
-        _FIXEDWIDTH_MEMO[memo_key] = out
+        return out
+
+    out = memo(spark, ("fixedwidth", os.path.abspath(sf_dir)), build)
     raw = spark.read.text(out)
     return raw.select(
         F.substring("value", 1, 4).cast("int").alias("n_nationkey"),

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.operators.llm import (
     MAX_LSH_BUCKET,
     _cap_buckets,
@@ -35,6 +35,7 @@ from metadata_extractors_api_spark.operators.quality import (
     _global_rank,
 )
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo
 
 #: context-window length (tokens) for concat-and-chunk packing.
 PACK_CHUNK = 512
@@ -389,23 +390,20 @@ def _incremental_minhash_oracle() -> str:
     """
 
 
-# The LSH index is a PERSISTED artifact in production (written once
-# per corpus epoch, bucketed on the band hash); the memoized
-# materialization is the local stand-in for that table, and it is what
-# makes the incremental run cost O(delta), not O(corpus).
-_BUCKET_INDEX_MEMO: dict = {}
-
-
 def _minhash_bucket_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    idx = _BUCKET_INDEX_MEMO.get(key)
-    if idx is None:
+    """The capped LSH bucket index, materialized once per session. In
+    production it is a PERSISTED artifact (written once per corpus
+    epoch, bucketed on the band hash); this materialization is the
+    local stand-in for that table, and it is what makes the incremental
+    run cost O(delta), not O(corpus)."""
+
+    def build() -> DataFrame:
         d = load(spark, sf_dir, "documents", parallelize=True)
-        idx = _cap_buckets(
+        return _cap_buckets(
             _minhash_band_buckets(minhash_signatures(d)), "band", "bh"
         ).localCheckpoint()
-        _BUCKET_INDEX_MEMO[key] = idx
-    return idx
+
+    return memo(spark, ("minhash_bucket_index", sf_dir), build)
 
 
 @register("dedup_incremental_minhash", oracle=_incremental_minhash_oracle())

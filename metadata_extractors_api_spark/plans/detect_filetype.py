@@ -29,15 +29,15 @@ detection relationally — any bug in the join/priority logic diverges.
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.sources import registry as reg
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 #: bytes of payload the census inspects (magic prefixes are short).
 HEAD_LEN = 32
@@ -69,17 +69,14 @@ DETECT_FILES: list[tuple[str, bytes]] = [
 
 RULES_SCHEMA = "filetype_id STRING, method STRING, pattern STRING, priority INT"
 
-_DIR: list[str] = []
 
-
+@functools.cache
 def _fixture_dir() -> str:
-    if not _DIR:
-        d = tempfile.mkdtemp(prefix="mdx_detect_")
-        for name, payload in DETECT_FILES:
-            with open(os.path.join(d, name), "wb") as fh:
-                fh.write(payload)
-        _DIR.append(d)
-    return _DIR[0]
+    d = scratch_dir("detect_")
+    for name, payload in DETECT_FILES:
+        with open(os.path.join(d, name), "wb") as fh:
+            fh.write(payload)
+    return d
 
 
 def _files_values_sql() -> str:
@@ -164,9 +161,6 @@ def detect_types(spark: SparkSession) -> DataFrame:
     )
 
 
-_STREAM_MEMO: dict = {}
-
-
 @register("stream_detect_filetype", oracle=DETECT_ORACLE)
 def stream_detect_filetype(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of ``extract_detect_filetype``: unlabeled files
@@ -178,16 +172,12 @@ def stream_detect_filetype(spark: SparkSession, sf_dir: str) -> DataFrame:
     the accumulated labels must equal the batch detection exactly — the
     oracle IS the batch query's oracle. Scale: per-batch work is
     O(batch x rules); nothing is held between batches."""
-    import tempfile
-
     from metadata_extractors_api_spark.plans.extract_batch import (
         first_extractor,
     )
 
-    key = session_key(spark)
-    out_dir = _STREAM_MEMO.get(key)
-    if out_dir is None:
-        out_dir = tempfile.mkdtemp(prefix="mdx_detect_stream_out_")
+    def build() -> str:
+        out_dir = scratch_dir("detect_stream_out_")
         stream = (
             spark.readStream.format("binaryFile")
             .schema(
@@ -240,14 +230,14 @@ def stream_detect_filetype(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         q = (
             census.writeStream.foreachBatch(process)
-            .option(
-                "checkpointLocation", tempfile.mkdtemp(prefix="mdx_ckpt_")
-            )
+            .option("checkpointLocation", scratch_dir("ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
         q.awaitTermination()
-        _STREAM_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = memo(spark, "stream_detect_filetype", build)
     return spark.read.schema(
         "fname string, detected_type string, via string, extractor_id string"
     ).parquet(out_dir)

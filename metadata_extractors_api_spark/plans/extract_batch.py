@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.sources import registry as reg
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 
 def first_extractor(registered: Column) -> Column:
@@ -262,31 +262,22 @@ _DISPATCH_ORACLE = f"""
 """
 
 
-# The dispatch plan is a large expression tree (two broadcast joins +
-# four template renders); building it dominates the query's local cost,
-# so the immutable DataFrame is memoized per session like the fixture
-# frames it reads.
-_DISPATCH_MEMO: dict[int, DataFrame] = {}
-
-
 @register("extract_dispatch", oracle=_DISPATCH_ORACLE)
 def extract_dispatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end A3-A9 composition on the fixture registry: every file
     resolved to (extractor, method, setup, rendered command, output
     path). The orphan file drops out at the extractor join, exactly as
-    the reference raises before execution."""
-    df = _DISPATCH_MEMO.get(session_key(spark))
-    if df is None:
-        df = extract_batch(spark, reg.files_df(spark)).filter(
+    the reference raises before execution. The dispatch plan is a
+    large expression tree (two broadcast joins + four template renders)
+    whose construction dominates the query's local cost, so it is built
+    once per session."""
+    return memo(
+        spark,
+        "extract_dispatch",
+        lambda: extract_batch(spark, reg.files_df(spark)).filter(
             F.col("extractor_id").isNotNull()
-        )
-        _DISPATCH_MEMO[session_key(spark)] = df
-    return df
-
-
-# Round-trip memo: one temp JSON write + declared-schema re-read per
-# session (the frames are immutable).
-_ROUNDTRIP_MEMO: dict = {}
+        ),
+    )
 
 
 def _roundtrip_snapshot(
@@ -297,9 +288,8 @@ def _roundtrip_snapshot(
     untyped text, and cast it into the declared StructTypes at the
     boundary (from_json — the scan_registry_json path)."""
     import os
-    import tempfile
 
-    base = tempfile.mkdtemp(prefix=f"mdx_regjson_{tag}_")
+    base = scratch_dir(f"regjson_{tag}_")
     ft_dir = os.path.join(base, "filetypes")
     ex_dir = os.path.join(base, "extractors")
     ft_df.coalesce(1).write.json(ft_dir)
@@ -328,17 +318,18 @@ def extract_dispatch_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs off the ROUND-TRIPPED frames. The oracle is
     extract_dispatch's verbatim: a lossy serialization (dropped struct
     field, map<->struct confusion, null/''-collapse) would hash-fail
-    against the fixture-direct result."""
-    df = _ROUNDTRIP_MEMO.get(session_key(spark))
-    if df is None:
+    against the fixture-direct result. The JSON write + declared-schema
+    re-read happens once per session (the frames are immutable)."""
+
+    def build() -> DataFrame:
         ft2, ex2 = _roundtrip_snapshot(
             spark, reg.filetypes_df(spark), reg.extractors_df(spark), "a"
         )
-        df = extract_batch(spark, reg.files_df(spark), (ft2, ex2)).filter(
+        return extract_batch(spark, reg.files_df(spark), (ft2, ex2)).filter(
             F.col("extractor_id").isNotNull()
         )
-        _ROUNDTRIP_MEMO[session_key(spark)] = df
-    return df
+
+    return memo(spark, "extract_dispatch_roundtrip", build)
 
 
 _DISPATCH_DIFF_ORACLE = f"""
@@ -386,52 +377,50 @@ def extract_dispatch_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: two dimension-sized registry ingests, two broadcast-
     join dispatch plans over the SAME files scan, one full outer join
     on file_id."""
-    key = (session_key(spark), "diff")
-    df = _ROUNDTRIP_MEMO.get(key)
-    if df is not None:
-        return df
-    ft_a, ex_a = _roundtrip_snapshot(
-        spark, reg.filetypes_df(spark), reg.extractors_df(spark), "a"
-    )
-    ft_b, ex_b = _roundtrip_snapshot(
-        spark, reg.filetypes_b_df(spark), reg.extractors_b_df(spark), "b"
-    )
-    cols = ["file_id", "path", "extractor_id", "rendered", "output_path",
-            "method"]
-    da = (
-        extract_batch(spark, reg.files_df(spark), (ft_a, ex_a))
-        .filter(F.col("extractor_id").isNotNull())
-        .select(*cols)
-    )
-    db = (
-        extract_batch(spark, reg.files_df(spark), (ft_b, ex_b))
-        .filter(F.col("extractor_id").isNotNull())
-        .select(*[F.col(c).alias(f"b_{c}") for c in cols])
-    )
-    j = da.join(db, da.file_id == db.b_file_id, "full_outer")
-    status = (
-        F.when(F.col("file_id").isNull(), F.lit("added"))
-        .when(F.col("b_file_id").isNull(), F.lit("removed"))
-        .when(
-            (F.col("extractor_id") != F.col("b_extractor_id"))
-            | (F.col("rendered") != F.col("b_rendered"))
-            | (F.col("output_path") != F.col("b_output_path"))
-            | (F.col("method") != F.col("b_method")),
-            F.lit("changed"),
+
+    def build() -> DataFrame:
+        ft_a, ex_a = _roundtrip_snapshot(
+            spark, reg.filetypes_df(spark), reg.extractors_df(spark), "a"
         )
-        .otherwise(F.lit("unchanged"))
-    )
-    df = j.select(
-        F.coalesce(F.col("file_id"), F.col("b_file_id")).alias("file_id"),
-        F.coalesce(F.col("path"), F.col("b_path")).alias("path"),
-        status.alias("status"),
-        F.col("extractor_id").alias("extractor_a"),
-        F.col("b_extractor_id").alias("extractor_b"),
-        F.col("rendered").alias("rendered_a"),
-        F.col("b_rendered").alias("rendered_b"),
-    )
-    _ROUNDTRIP_MEMO[key] = df
-    return df
+        ft_b, ex_b = _roundtrip_snapshot(
+            spark, reg.filetypes_b_df(spark), reg.extractors_b_df(spark), "b"
+        )
+        cols = ["file_id", "path", "extractor_id", "rendered", "output_path",
+                "method"]
+        da = (
+            extract_batch(spark, reg.files_df(spark), (ft_a, ex_a))
+            .filter(F.col("extractor_id").isNotNull())
+            .select(*cols)
+        )
+        db = (
+            extract_batch(spark, reg.files_df(spark), (ft_b, ex_b))
+            .filter(F.col("extractor_id").isNotNull())
+            .select(*[F.col(c).alias(f"b_{c}") for c in cols])
+        )
+        j = da.join(db, da.file_id == db.b_file_id, "full_outer")
+        status = (
+            F.when(F.col("file_id").isNull(), F.lit("added"))
+            .when(F.col("b_file_id").isNull(), F.lit("removed"))
+            .when(
+                (F.col("extractor_id") != F.col("b_extractor_id"))
+                | (F.col("rendered") != F.col("b_rendered"))
+                | (F.col("output_path") != F.col("b_output_path"))
+                | (F.col("method") != F.col("b_method")),
+                F.lit("changed"),
+            )
+            .otherwise(F.lit("unchanged"))
+        )
+        return j.select(
+            F.coalesce(F.col("file_id"), F.col("b_file_id")).alias("file_id"),
+            F.coalesce(F.col("path"), F.col("b_path")).alias("path"),
+            status.alias("status"),
+            F.col("extractor_id").alias("extractor_a"),
+            F.col("b_extractor_id").alias("extractor_b"),
+            F.col("rendered").alias("rendered_a"),
+            F.col("b_rendered").alias("rendered_b"),
+        )
+
+    return memo(spark, "extract_dispatch_diff", build)
 
 
 _RUN_SCHEMA = "file_id long, method string, channel string, point int, value double"
@@ -910,9 +899,6 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STREAM_RUN_MEMO: dict = {}
-
-
 @register("stream_extract_run", oracle=ORACLE_RUN_SQL)
 def stream_extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING twin of the Phase-4 centerpiece: the reference
@@ -928,20 +914,17 @@ def stream_extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing but the file-source ledger: each batch's work is
     independent, which is what makes this the shape that ingests
     forever on a cluster."""
-    import tempfile
 
-    key = (session_key(spark), sf_dir)
-    out_dir = _STREAM_RUN_MEMO.get(key)
-    if out_dir is None:
+    def build() -> str:
         files = reg.files_df(spark)
-        stage_dir = tempfile.mkdtemp(prefix="mdx_stream_files_")
+        stage_dir = scratch_dir("stream_files_")
         # stage the ingest queue deterministically: one file per
         # micro-batch, split by file_id
         for i in range(3):
             files.filter(F.col("file_id") % 3 == i).coalesce(1).write.mode(
                 "append"
             ).parquet(stage_dir)
-        out_dir = tempfile.mkdtemp(prefix="mdx_stream_run_out_")
+        out_dir = scratch_dir("stream_run_out_")
 
         def process(batch_df: DataFrame, _batch_id: int) -> None:
             dispatched = extract_batch(spark, batch_df).filter(
@@ -961,17 +944,16 @@ def stream_extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         try:
             q = (
                 stream.writeStream.foreachBatch(process)
-                .option(
-                    "checkpointLocation",
-                    tempfile.mkdtemp(prefix="mdx_ckpt_"),
-                )
+                .option("checkpointLocation", scratch_dir("ckpt_"))
                 .trigger(availableNow=True)
                 .start()
             )
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _STREAM_RUN_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = memo(spark, ("stream_extract_run", sf_dir), build)
     return spark.read.schema(_RUN_SCHEMA).parquet(out_dir)
 
 

@@ -9,10 +9,20 @@ per query.
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import SparkSession
+
+from metadata_extractors_api_spark.store import scratch_dir
+
+
+@functools.cache
+def _warehouse() -> str:
+    # one warehouse per process: a dir shared by every process on the
+    # host lets one process's stale-table cleanup delete another's live
+    # table (operators/scale.py join_bucketed)
+    return scratch_dir("warehouse_")
 
 
 def get_spark(
@@ -45,10 +55,7 @@ def get_spark(
         # managed tables (bucketed joins) land outside the repo
         .config(
             "spark.sql.warehouse.dir",
-            os.environ.get(
-                "SPARK_GRAFT_WAREHOUSE",
-                os.path.join(tempfile.gettempdir(), "mdx_warehouse"),
-            ),
+            os.environ.get("SPARK_GRAFT_WAREHOUSE") or _warehouse(),
         )
         .config("spark.ui.enabled", "false")
     )

@@ -26,14 +26,15 @@ file -- nothing is derived by running the query itself.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import scratch_dir
 
 # Deterministic pseudo-binary payloads: varied sizes (including one
 # empty file -- a real corpus always has a few) with byte patterns that
@@ -68,22 +69,19 @@ _BIN_ORACLE = (
     " FROM files WHERE n_bytes > 0"
 )
 
+
 # One fixture dir per process: the files are immutable once written, so
-# every session (and the DuckDB-free oracle) can share them.
-_DIR: list[str] = []
-
-
+# every session can share them.
+@functools.cache
 def _fixture_dir() -> str:
-    if not _DIR:
-        d = tempfile.mkdtemp(prefix="mdx_binfiles_")
-        # decoy that pathGlobFilter must skip at listing time
-        with open(os.path.join(d, "ignore.txt"), "wb") as f:
-            f.write(b"not a scan")
-        for i, (name, size) in enumerate(_BIN_FILES):
-            with open(os.path.join(d, name), "wb") as f:
-                f.write(_payload(i, size))
-        _DIR.append(d)
-    return _DIR[0]
+    d = scratch_dir("binfiles_")
+    # decoy that pathGlobFilter must skip at listing time
+    with open(os.path.join(d, "ignore.txt"), "wb") as f:
+        f.write(b"not a scan")
+    for i, (name, size) in enumerate(_BIN_FILES):
+        with open(os.path.join(d, name), "wb") as f:
+            f.write(_payload(i, size))
+    return d
 
 
 @register("scan_binary_files", oracle=_BIN_ORACLE)

@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,8 +28,9 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 SINK_PARTS = 4  # explicit repartition -> deterministic shard count
 
@@ -85,9 +85,6 @@ class AuditSinkWriter(DataSourceWriter):
                 pass
 
 
-_SINK_REGISTERED: set[int] = set()
-
-
 @register(
     "sink_custom_writer",
     oracle="""
@@ -111,12 +108,10 @@ def sink_custom_writer(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same slice. Scale: shards stream row-by-row on executors (no
     partition materialization), the manifest is O(partitions), and the
     audit is an ordinary distributed scan of the written files."""
-    if session_key(spark) not in _SINK_REGISTERED:
-        spark.dataSource.register(AuditSinkDataSource)
-        _SINK_REGISTERED.add(session_key(spark))
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"mdx_audit_sink_{uuid.uuid4().hex}"
+    memo(
+        spark, "audit_sink", lambda: spark.dataSource.register(AuditSinkDataSource)
     )
+    out_dir = scratch_dir("audit_sink_")
     li = (
         load(spark, sf_dir, "lineitem")
         .filter(F.col("l_returnflag") == "R")
@@ -223,16 +218,12 @@ def stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         _nanos_conf,
     )
 
-    if session_key(spark) not in _SINK_REGISTERED:
-        spark.dataSource.register(AuditSinkDataSource)
-        _SINK_REGISTERED.add(session_key(spark))
-    key = ("stream", session_key(spark))
-    if key not in _SINK_REGISTERED:
-        spark.dataSource.register(AuditStreamSinkDataSource)
-        _SINK_REGISTERED.add(key)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"mdx_audit_ssink_{uuid.uuid4().hex}"
+    memo(
+        spark,
+        "audit_stream_sink",
+        lambda: spark.dataSource.register(AuditStreamSinkDataSource),
     )
+    out_dir = scratch_dir("audit_ssink_")
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "16")
@@ -241,9 +232,7 @@ def stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             q = (
                 ev.writeStream.format("mdx_audit_stream_sink")
                 .option("path", out_dir)
-                .option(
-                    "checkpointLocation", tempfile.mkdtemp(prefix="mdx_ckpt_")
-                )
+                .option("checkpointLocation", scratch_dir("ckpt_"))
                 .trigger(availableNow=True)
                 .start()
             )

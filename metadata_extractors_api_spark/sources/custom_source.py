@@ -16,7 +16,7 @@ from pyspark.sql.datasource import DataSource, DataSourceReader
 
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.sources import registry as reg
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo
 
 REGISTRY_SOURCE_SCHEMA = (
     "id string, n_supported int, n_usage int, first_package string"
@@ -40,8 +40,8 @@ class RegistryDataSource(DataSource):
 class RegistryReader(DataSourceReader):
     # Snapshot the fixture into a CLASS ATTRIBUTE of plain tuples: the
     # reader pickles by value, and referencing the registry MODULE from
-    # read() would drag its session-bound DataFrame memo into the pickle
-    # (SparkContext is unserializable).
+    # read() would drag the session-bound DataFrames it caches through
+    # store.memo into the pickle (SparkContext is unserializable).
     ROWS = [
         (
             eid,
@@ -54,11 +54,6 @@ class RegistryReader(DataSourceReader):
 
     def read(self, partition):
         yield from self.ROWS
-
-
-# one registration per session (repeat registration only WARN-logs a
-# replace, but there is no reason to redo the work every query call)
-_REGISTERED: set[int] = set()
 
 
 @register(
@@ -76,7 +71,9 @@ def scan_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the registry through the custom Python DataSource and check
     it against the same fixture literals rendered as SQL -- proving the
     pluggable-source path delivers identical typed content."""
-    if session_key(spark) not in _REGISTERED:
-        spark.dataSource.register(RegistryDataSource)
-        _REGISTERED.add(session_key(spark))
+    # repeat registration only WARN-logs a replace, but there is no
+    # reason to redo it every query call
+    memo(
+        spark, "registry_source", lambda: spark.dataSource.register(RegistryDataSource)
+    )
     return spark.read.format("mdx_registry").load()

@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo
 
 # --- fixture literals -------------------------------------------------------
 
@@ -123,49 +123,44 @@ EXTRACTORS_SCHEMA = (
 FILES_SCHEMA = "file_id BIGINT, path STRING, filetype_id STRING, size_bytes BIGINT"
 
 
-# Per-session memo: createDataFrame pays a driver-side Py->JVM
-# conversion every call; the fixtures are immutable, so one DataFrame
-# per (session, table) suffices.
-_DF_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
-def _memo(spark: SparkSession, name: str, rows, schema: str) -> DataFrame:
+def _frame(spark: SparkSession, name: str, rows, schema: str) -> DataFrame:
     """The fixture rows as a DataFrame of the declared schema. Built
     from a pyarrow Table typed by that schema, so the frame is a
     LocalRelation whose rows live in the plan itself (a broadcast of it
     is collected in the driver) rather than an RDD of pickled slices
-    that every query re-scans in tasks."""
-    key = (session_key(spark), name)
-    df = _DF_MEMO.get(key)
-    if df is None:
+    that every query re-scans in tasks. createDataFrame pays a
+    driver-side Py->JVM conversion every call and the fixtures are
+    immutable, so each frame is built once per session."""
+
+    def build() -> DataFrame:
         struct = StructType.fromDDL(schema)
         table = pa.Table.from_pylist(
             [dict(zip(struct.names, row)) for row in rows],
             schema=to_arrow_schema(struct),
         )
-        df = spark.createDataFrame(table)
-        _DF_MEMO[key] = df
-    return df
+        return spark.createDataFrame(table)
+
+    return memo(spark, ("registry", name), build)
 
 
 def filetypes_df(spark: SparkSession) -> DataFrame:
-    return _memo(spark, "filetypes", FILETYPES, FILETYPES_SCHEMA)
+    return _frame(spark, "filetypes", FILETYPES, FILETYPES_SCHEMA)
 
 
 def extractors_df(spark: SparkSession) -> DataFrame:
-    return _memo(spark, "extractors", EXTRACTORS, EXTRACTORS_SCHEMA)
+    return _frame(spark, "extractors", EXTRACTORS, EXTRACTORS_SCHEMA)
 
 
 def files_df(spark: SparkSession) -> DataFrame:
-    return _memo(spark, "files", FILES, FILES_SCHEMA)
+    return _frame(spark, "files", FILES, FILES_SCHEMA)
 
 
 def filetypes_b_df(spark: SparkSession) -> DataFrame:
-    return _memo(spark, "filetypes_b", FILETYPES_B, FILETYPES_SCHEMA)
+    return _frame(spark, "filetypes_b", FILETYPES_B, FILETYPES_SCHEMA)
 
 
 def extractors_b_df(spark: SparkSession) -> DataFrame:
-    return _memo(spark, "extractors_b", EXTRACTORS_B, EXTRACTORS_SCHEMA)
+    return _frame(spark, "extractors_b", EXTRACTORS_B, EXTRACTORS_SCHEMA)
 
 
 # --- DuckDB renderings of the same fixtures ---------------------------------

@@ -18,7 +18,6 @@ which Python stream sources don't support yet.
 
 from __future__ import annotations
 
-import tempfile
 import time
 import uuid
 
@@ -27,7 +26,7 @@ from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.sources import registry as reg
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 FEED_SCHEMA = reg.FILES_SCHEMA
 FEED_BATCH = 3  # rows per micro-batch -> the 6-file fixture drains in 2
@@ -49,9 +48,9 @@ class FileFeedDataSource(DataSource):
 
 class FileFeedReader(SimpleDataSourceStreamReader):
     # Plain-tuple snapshot (class attribute): the reader pickles by
-    # value; referencing the registry module from read() would drag its
-    # session-bound DataFrame memo into the pickle (same constraint as
-    # the batch RegistryReader).
+    # value; referencing the registry module from read() would drag the
+    # session-bound DataFrames it caches into the pickle (same
+    # constraint as the batch RegistryReader).
     ROWS = list(reg.FILES)
 
     def initialOffset(self) -> dict:
@@ -68,9 +67,6 @@ class FileFeedReader(SimpleDataSourceStreamReader):
         return iter(self.ROWS[start["i"] : end["i"]])
 
 
-_REGISTERED: set[int] = set()
-
-
 @register(
     "stream_custom_source",
     oracle=f"SELECT * FROM {reg.files_values_sql()}",
@@ -83,9 +79,9 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     generated it. The offset/readBetweenOffsets contract (not the
     fixture) is the deliverable: swap ROWS for an HTTP poll against a
     real registry and the exactly-once replay semantics carry over."""
-    if session_key(spark) not in _REGISTERED:
-        spark.dataSource.register(FileFeedDataSource)
-        _REGISTERED.add(session_key(spark))
+    memo(
+        spark, "file_feed_source", lambda: spark.dataSource.register(FileFeedDataSource)
+    )
     df = spark.readStream.format("mdx_file_feed").load()
     name = "s" + uuid.uuid4().hex[:12]
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -95,7 +91,7 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             df.writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="mdx_feed_ckpt_"))
+            .option("checkpointLocation", scratch_dir("feed_ckpt_"))
             .trigger(processingTime="250 milliseconds")
             .start()
         )

@@ -21,13 +21,14 @@ derived by running the query.
 
 from __future__ import annotations
 
+import functools
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import scratch_dir
 
 #: (run id, instrument, points, channel list) — the well-formed rows.
 XML_RUNS: list[tuple[int, str, int, list[str]]] = [
@@ -52,16 +53,12 @@ def _xml_text() -> str:
     return "<runs>" + "".join(rows) + "</runs>"
 
 
-_DIR: list[str] = []
-
-
+@functools.cache
 def _fixture_dir() -> str:
-    if not _DIR:
-        d = tempfile.mkdtemp(prefix="mdx_xml_")
-        with open(os.path.join(d, "runs.xml"), "w") as fh:
-            fh.write(_xml_text())
-        _DIR.append(d)
-    return _DIR[0]
+    d = scratch_dir("xml_")
+    with open(os.path.join(d, "runs.xml"), "w") as fh:
+        fh.write(_xml_text())
+    return d
 
 
 def _oracle() -> str:

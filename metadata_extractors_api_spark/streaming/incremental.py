@@ -34,13 +34,12 @@ over report-sized pairs.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from metadata_extractors_api_spark.catalog import load, session_key
+from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 from metadata_extractors_api_spark.streaming.windows import (
     stream_shuffle_partitions,
 )
@@ -51,11 +50,6 @@ RESULT_SCHEMA = (
 
 #: number of staged delta files == number of micro-batches.
 N_DELTA_FILES = 3
-
-# per-(session, sf_dir) memo of the drained result directory: the
-# stream is deterministic and its inputs immutable, so one drain per
-# session suffices (the registry sweep and plan audit both re-call).
-_RESULT_MEMO: dict = {}
 
 
 def _batch_twin_oracle() -> str:
@@ -74,7 +68,8 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result table. Final state == the batch twin
     (``dedup_incremental_minhash``), asserted by sharing its oracle
     verbatim — the strongest batch/stream symmetry the engine can
-    state."""
+    state. The stream is deterministic and its inputs immutable, so it
+    drains once per session."""
     from metadata_extractors_api_spark.operators.llm import (
         _minhash_band_buckets,
         exact_jaccard_verify,
@@ -85,12 +80,10 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _minhash_bucket_index,
     )
 
-    key = (session_key(spark), sf_dir)
-    out_dir = _RESULT_MEMO.get(key)
-    if out_dir is None:
+    def build() -> str:
         d = load(spark, sf_dir, "documents", parallelize=True)
         delta = d.filter(F.col("doc_id") % DELTA_MOD == 0)
-        delta_dir = tempfile.mkdtemp(prefix="mdx_stream_delta_")
+        delta_dir = scratch_dir("stream_delta_")
         # stage the ingest queue: N files -> N micro-batches, split
         # deterministically so every run stages identical files
         for i in range(N_DELTA_FILES):
@@ -100,7 +93,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).coalesce(1).write.mode("append").parquet(delta_dir)
 
         index = _minhash_bucket_index(spark, sf_dir)
-        out_dir = tempfile.mkdtemp(prefix="mdx_stream_dedup_out_")
+        out_dir = scratch_dir("stream_dedup_out_")
 
         def process(batch_df: DataFrame, _batch_id: int) -> None:
             b = _minhash_band_buckets(minhash_signatures(batch_df))
@@ -139,20 +132,19 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set(
-        "spark.sql.shuffle.partitions", stream_shuffle_partitions()
-    )
+            "spark.sql.shuffle.partitions", stream_shuffle_partitions()
+        )
         try:
             q = (
                 stream.writeStream.foreachBatch(process)
-                .option(
-                    "checkpointLocation",
-                    tempfile.mkdtemp(prefix="mdx_ckpt_"),
-                )
+                .option("checkpointLocation", scratch_dir("ckpt_"))
                 .trigger(availableNow=True)
                 .start()
             )
             q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _RESULT_MEMO[key] = out_dir
+        return out_dir
+
+    out_dir = memo(spark, ("stream_dedup_incremental", sf_dir), build)
     return spark.read.schema(RESULT_SCHEMA).parquet(out_dir).distinct()

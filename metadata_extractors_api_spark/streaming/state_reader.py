@@ -20,37 +20,23 @@ checkpoint, never a replay of the input.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
-from metadata_extractors_api_spark.catalog import session_key
+from metadata_extractors_api_spark.store import memo, scratch_dir
 from metadata_extractors_api_spark.streaming.windows import (
     _events_stream,
     _nanos_conf,
 )
 
-_CKPT_MEMO: dict = {}
 
+def _state_ckpt(spark: SparkSession, sf_dir: str) -> str:
+    """Checkpoint of the drained per-event-type counting stream, shared
+    by both queries below and drained once per session."""
 
-@register(
-    "stream_state_reader",
-    oracle="""
-    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
-    FROM events GROUP BY event_type
-    """,
-)
-def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drain a per-event-type counting stream to a checkpoint, then
-    read the aggregation state back via the ``statestore`` data source
-    and emit (event_type, n) from the STATE rows — which must equal
-    the batch GROUP BY over the same fixture."""
-    key = (session_key(spark), sf_dir)
-    ckpt = _CKPT_MEMO.get(key)
-    if ckpt is None:
-        ckpt = tempfile.mkdtemp(prefix="mdx_state_ckpt_")
+    def build() -> str:
+        ckpt = scratch_dir("state_ckpt_")
         ev = _events_stream(spark, sf_dir)
         agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
         prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -71,8 +57,24 @@ def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
                 q.awaitTermination()
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
-        _CKPT_MEMO[key] = ckpt
-    state = spark.read.format("statestore").load(ckpt)
+        return ckpt
+
+    return memo(spark, ("state_ckpt", sf_dir), build)
+
+
+@register(
+    "stream_state_reader",
+    oracle="""
+    SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+    FROM events GROUP BY event_type
+    """,
+)
+def stream_state_reader(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Drain a per-event-type counting stream to a checkpoint, then
+    read the aggregation state back via the ``statestore`` data source
+    and emit (event_type, n) from the STATE rows — which must equal
+    the batch GROUP BY over the same fixture."""
+    state = spark.read.format("statestore").load(_state_ckpt(spark, sf_dir))
     return state.select(
         F.col("key.event_type").alias("event_type"),
         F.col("value.count").cast("bigint").alias("n"),
@@ -101,10 +103,7 @@ def stream_state_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a single availableNow batch (id 0). The oracle states the
     expected topology as literals; a retention/partitioning regression
     in the drain path diverges."""
-    # ensure the shared checkpoint exists (memoized drain)
-    stream_state_reader(spark, sf_dir)
-    ckpt = _CKPT_MEMO[(session_key(spark), sf_dir)]
-    md = spark.read.format("state-metadata").load(ckpt)
+    md = spark.read.format("state-metadata").load(_state_ckpt(spark, sf_dir))
     return md.select(
         F.col("operatorId").cast("bigint").alias("operator_id"),
         F.col("operatorName").alias("operator_name"),

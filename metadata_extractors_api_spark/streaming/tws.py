@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import scratch_dir
 from metadata_extractors_api_spark.streaming.windows import (
     _events_stream_batched,
     _run_to_table,
@@ -282,11 +283,6 @@ def _ewma_update(key, pdfs, state):
     )
 
 
-#: (session, sf_dir) -> checkpoint dir of the drained ewma-tws stream,
-#: so the state-metadata/statestore tests can audit the state schema.
-_EWMA_CKPT_MEMO: dict = {}
-
-
 @register(
     "stream_ewma_tws",
     oracle="""
@@ -327,19 +323,10 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the semantics cannot fork. Drains the multi-micro-batch source
     (three time-ordered deliveries), so cross-batch state restore is
     genuinely exercised; the final emission per key must equal the
-    batch EWMA's last row -- stream_ewma's oracle verbatim. The drain
-    checkpoint is memoized for the state-schema audit tests."""
+    batch EWMA's last row -- stream_ewma's oracle verbatim."""
     ev = _events_stream_batched(spark, sf_dir)
-    if HAS_TWS_DEPS:  # pragma: no cover - exercised on cluster images
-        with _rocksdb_conf(spark):
-            updates, ckpt = _run_to_table_ckpt(
-                _ewma_tws_updates(ev), spark
-            )
-    else:
-        updates, ckpt = _run_to_table_ckpt(_ewma_tws_updates(ev), spark)
-    from metadata_extractors_api_spark.catalog import session_key
-
-    _EWMA_CKPT_MEMO[(session_key(spark), sf_dir)] = ckpt
+    with _rocksdb_conf(spark) if HAS_TWS_DEPS else contextlib.nullcontext():
+        updates, _ = _run_to_table_ckpt(_ewma_tws_updates(ev), spark)
     return _ewma_tws_serve(updates)
 
 
@@ -387,13 +374,12 @@ def _ewma_tws_serve(updates: DataFrame) -> DataFrame:
 def _run_to_table_ckpt(stream_df: DataFrame, spark: SparkSession):
     """_run_to_table variant that also returns the checkpoint path (the
     state-audit tests read it back through the statestore sources)."""
-    import tempfile
     import uuid
 
     from metadata_extractors_api_spark.streaming.windows import _nanos_conf
 
     name = "s" + uuid.uuid4().hex[:12]
-    ckpt = tempfile.mkdtemp(prefix="mdx_tws_ckpt_")
+    ckpt = scratch_dir("tws_ckpt_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set(
         "spark.sql.shuffle.partitions", stream_shuffle_partitions()

@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import contextlib
 import shutil
-import tempfile
 import uuid
 import os
 
@@ -30,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.store import memo, scratch_dir
 
 
 @contextlib.contextmanager
@@ -85,10 +85,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-#: (session, sf_dir, n_files) -> directory of the split events files.
-_EVSPLIT_MEMO: dict = {}
-
-
 def _events_stream_batched(
     spark: SparkSession, sf_dir: str, n_files: int = 3,
     single_trigger: bool = False,
@@ -131,17 +127,13 @@ def _events_stream_batched(
 
 
 def _events_split_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str:
-    """Provision (memoized) the time-contiguous chunk directory used by
-    `_events_stream_batched`; exposed separately so the restart tests
-    can copy chunks into their own staging dir incrementally."""
-    import os
+    """Provision (once per session) the time-contiguous chunk directory
+    used by `_events_stream_batched`; exposed separately so the restart
+    tests can copy chunks into their own staging dir incrementally."""
+    from metadata_extractors_api_spark.catalog import load
 
-    from metadata_extractors_api_spark.catalog import load, session_key
-
-    key = (session_key(spark), sf_dir, n_files)
-    d = _EVSPLIT_MEMO.get(key)
-    if d is None:
-        d = tempfile.mkdtemp(prefix="mdx_evsplit_")
+    def build() -> str:
+        d = scratch_dir("evsplit_")
         ev = load(spark, sf_dir, "events")
         lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
         span = (hi - lo) / n_files
@@ -168,8 +160,9 @@ def _events_split_dir(spark: SparkSession, sf_dir: str, n_files: int = 3) -> str
             # the renamed ev_*.parquet files can ever match a glob, and
             # temp usage stays bounded to the chunks themselves.
             shutil.rmtree(part_dir, ignore_errors=True)
-        _EVSPLIT_MEMO[key] = d
-    return d
+        return d
+
+    return memo(spark, ("events_split", sf_dir, n_files), build)
 
 
 def _events_stream_from_dir(
@@ -225,7 +218,7 @@ def _run_to_table(stream_df: DataFrame, spark: SparkSession, mode: str) -> DataF
                 stream_df.writeStream.format("memory")
                 .queryName(name)
                 .outputMode(mode)
-                .option("checkpointLocation", tempfile.mkdtemp(prefix="mdx_ckpt_"))
+                .option("checkpointLocation", scratch_dir("ckpt_"))
                 .trigger(availableNow=True)
                 .start()
             )
@@ -367,9 +360,8 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint; here each batch writes parquet partitioned by batch id,
     then the result is read back and aggregated."""
     import os
-    import tempfile
 
-    out = tempfile.mkdtemp(prefix="mdx_foreach_")
+    out = scratch_dir("foreach_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         # idempotent: re-delivery of a batch overwrites the same path
@@ -379,7 +371,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     with _nanos_conf(spark):
         q = (
             ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="mdx_ckpt_"))
+            .option("checkpointLocation", scratch_dir("ckpt_"))
             .trigger(availableNow=True)
             .start()
         )
@@ -511,7 +503,7 @@ def stream_incremental_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metadata_extractors_api_spark.catalog import load
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source")
-    base = tempfile.mkdtemp(prefix="mdx_incr_")
+    base = scratch_dir("incr_")
     in_dir = os.path.join(base, "in")
     sink = os.path.join(base, "sink")
     ckpt = os.path.join(base, "ckpt")

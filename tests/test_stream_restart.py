@@ -21,7 +21,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pytest
 
@@ -42,8 +41,9 @@ from metadata_extractors_api_spark.streaming.tws import (
 )
 
 
-def _restart_drain(spark, sf_dir, build_updates):
-    """Run build_updates(ev_stream) through a two-run restart drain.
+def _restart_drain(spark, sf_dir, build_updates, base):
+    """Run build_updates(ev_stream) through a two-run restart drain
+    staged under the empty directory ``base``.
 
     Returns (updates_df, n_batches_run1, n_batches_run2)."""
     src = _events_split_dir(spark, sf_dir, 3)
@@ -51,7 +51,6 @@ def _restart_drain(spark, sf_dir, build_updates):
         f for f in os.listdir(src) if f.endswith(".parquet")
     )
     assert len(chunks) == 3
-    base = tempfile.mkdtemp(prefix="mdx_restart_")
     staged = os.path.join(base, "in")
     sink = os.path.join(base, "sink")
     ckpt = os.path.join(base, "ckpt")
@@ -95,13 +94,15 @@ def _restart_drain(spark, sf_dir, build_updates):
         .agg(F.countDistinct("batch_id").alias("n"))
         .collect()
     }
-    # NOTE: `base` stays on disk until process exit — `updates` reads
-    # the sink lazily, so callers collect from it after we return.
+    # `updates` reads the sink lazily: callers collect from it while
+    # `base` still exists.
     return updates, per_run.get(1, 0), per_run.get(2, 0)
 
 
-def test_pattern_funnel_state_survives_restart(spark, sf_dir):
-    updates, b1, b2 = _restart_drain(spark, sf_dir, _pattern_funnel_updates)
+def test_pattern_funnel_state_survives_restart(spark, sf_dir, tmp_path):
+    updates, b1, b2 = _restart_drain(
+        spark, sf_dir, _pattern_funnel_updates, str(tmp_path)
+    )
     # run 1 processed the two staged chunks; run 2 ONLY the new one
     assert b1 == 2, f"run 1 ran {b1} micro-batches, expected 2"
     assert b2 == 1, f"run 2 ran {b2} micro-batches, expected 1 (replay?)"
@@ -138,14 +139,16 @@ def test_pattern_funnel_state_survives_restart(spark, sf_dir):
         )
 
 
-def test_ewma_tws_state_survives_restart(spark, sf_dir):
+def test_ewma_tws_state_survives_restart(spark, sf_dir, tmp_path):
     if HAS_TWS_DEPS:  # pragma: no cover - container lacks protobuf
         with _rocksdb_conf(spark):
             updates, b1, b2 = _restart_drain(
-                spark, sf_dir, _ewma_tws_updates
+                spark, sf_dir, _ewma_tws_updates, str(tmp_path)
             )
     else:
-        updates, b1, b2 = _restart_drain(spark, sf_dir, _ewma_tws_updates)
+        updates, b1, b2 = _restart_drain(
+            spark, sf_dir, _ewma_tws_updates, str(tmp_path)
+        )
     assert b1 == 2, f"run 1 ran {b1} micro-batches, expected 2"
     assert b2 == 1, f"run 2 ran {b2} micro-batches, expected 1 (replay?)"
     got = (
@@ -185,7 +188,7 @@ def test_ewma_tws_state_survives_restart(spark, sf_dir):
         )
 
 
-def test_markov_transition_state_survives_restart(spark, sf_dir):
+def test_markov_transition_state_survives_restart(spark, sf_dir, tmp_path):
     """The markov twin's distinguishing property: the LAST-EVENT carry
     in state links transitions across the restart boundary. Beyond the
     standard resume assertions, this checks the total transition count
@@ -197,7 +200,9 @@ def test_markov_transition_state_survives_restart(spark, sf_dir):
         _markov_updates,
     )
 
-    updates, b1, b2 = _restart_drain(spark, sf_dir, _markov_updates)
+    updates, b1, b2 = _restart_drain(
+        spark, sf_dir, _markov_updates, str(tmp_path)
+    )
     assert b1 == 2, f"run 1 ran {b1} micro-batches, expected 2"
     assert b2 == 1, f"run 2 ran {b2} micro-batches, expected 1 (replay?)"
     got = (
@@ -222,7 +227,9 @@ def test_markov_transition_state_survives_restart(spark, sf_dir):
     assert int(got["n"].sum()) == total - users
 
 
-def test_ohlc_state_survives_restart_out_of_order_split(spark, sf_dir):
+def test_ohlc_state_survives_restart_out_of_order_split(
+    spark, sf_dir, tmp_path
+):
     """The OHLC twin's distinguishing property, tested on the HARDEST
     split: unlike the funnel/markov twins (which need time-contiguous
     chunks), the OHLC fold carries (ts, event_id) open/close WITNESSES
@@ -240,7 +247,7 @@ def test_ohlc_state_survives_restart_out_of_order_split(spark, sf_dir):
         _ohlc_updates,
     )
 
-    base = tempfile.mkdtemp(prefix="mdx_ohlc_restart_")
+    base = str(tmp_path)
     staged = os.path.join(base, "in")
     sink = os.path.join(base, "sink")
     ckpt = os.path.join(base, "ckpt")

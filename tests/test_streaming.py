@@ -162,23 +162,30 @@ def test_ewma_tws_state_schema_and_multibatch(spark, sf_dir):
     MULTIPLE micro-batches (maxBatchId >= 2 proves per-key state was
     restored at least twice -- the property the single-file source
     never exercised), and (c) expose the declared state schema through
-    the statestore source."""
-    from metadata_extractors_api_spark.streaming.tws import (
-        _EWMA_CKPT_MEMO,
-        HAS_TWS_DEPS,
-    )
-    from metadata_extractors_api_spark.catalog import session_key
+    the statestore source. Drains through the query's own helpers so
+    the checkpoint path is in hand."""
+    from contextlib import nullcontext
 
-    a = {
-        tuple(r)
-        for r in mdx.QUERIES["stream_ewma_tws"](spark, sf_dir).collect()
-    }
+    from metadata_extractors_api_spark.streaming.tws import (
+        HAS_TWS_DEPS,
+        _ewma_tws_serve,
+        _ewma_tws_updates,
+        _rocksdb_conf,
+        _run_to_table_ckpt,
+    )
+    from metadata_extractors_api_spark.streaming.windows import (
+        _events_stream_batched,
+    )
+
+    ev = _events_stream_batched(spark, sf_dir)
+    with _rocksdb_conf(spark) if HAS_TWS_DEPS else nullcontext():
+        updates, ckpt = _run_to_table_ckpt(_ewma_tws_updates(ev), spark)
+    a = {tuple(r) for r in _ewma_tws_serve(updates).collect()}
     b = {
         tuple(r) for r in mdx.QUERIES["stream_ewma"](spark, sf_dir).collect()
     }
     assert a == b  # typed-state twin == packed-struct twin, final state
 
-    ckpt = _EWMA_CKPT_MEMO[(session_key(spark), sf_dir)]
     md = spark.read.format("state-metadata").load(ckpt).collect()
     assert len(md) == 1
     row = md[0]
