@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.store import memo
 
 TABLES = [
@@ -73,15 +74,8 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     except Exception:
         df = None
     if df is None:
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
+        with conf_scope(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
             df = spark.read.parquet(path)
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-            else:
-                spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))

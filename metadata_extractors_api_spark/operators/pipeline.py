@@ -800,6 +800,20 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum over nodes of |rank_K - rank_(K-1)| in exact integer units, so
     a fixed horizon that under-converges on bigger data is visible in
     the output (and oracle-checked) instead of silently wrong."""
+    ranks, res = _trade_pagerank(spark, sf_dir)
+    return ranks.crossJoin(F.broadcast(res)).select(
+        "node", F.col("rank").alias("rank_units"), "residual_units"
+    )
+
+
+def _trade_pagerank(
+    spark: SparkSession, sf_dir: str, seeds: tuple[int, ...] | None = None
+) -> tuple[DataFrame, DataFrame]:
+    """PR_ITERS integer power iterations over the trade graph, shared by
+    graph_pagerank and graph_ppr: returns the final (node, rank) frame
+    and the one-row residual_units witness. With ``seeds`` the initial
+    rank units and the 15% restart go to the seed nodes only
+    (personalized); without, to every node."""
     li = load(spark, sf_dir, "lineitem")
     orders = load(spark, sf_dir, "orders")
     cust = load(spark, sf_dir, "customer")
@@ -819,8 +833,14 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     edges_deg = edges.join(deg, "src").localCheckpoint()
     nodes = nation.select(F.col("n_nationkey").alias("node"))
+    if seeds is None:
+        init, base = F.lit(PR_SCALE), F.lit(PR_BASE)
+    else:
+        seed_col = F.col("node").isin(*seeds)
+        init = F.when(seed_col, F.lit(PR_SCALE)).otherwise(F.lit(0))
+        base = F.when(seed_col, F.lit(PR_BASE)).otherwise(F.lit(0))
 
-    ranks = nodes.withColumn("rank", F.lit(PR_SCALE).cast("bigint"))
+    ranks = nodes.withColumn("rank", init.cast("bigint"))
     prev = ranks
     for _ in range(PR_ITERS):
         contribs = (
@@ -837,25 +857,21 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             nodes.join(contribs, "node", "left")
             .select(
                 "node",
-                (F.lit(PR_BASE) + F.coalesce(F.col("c"), F.lit(0)))
+                (base + F.coalesce(F.col("c"), F.lit(0)))
                 .cast("bigint")
                 .alias("rank"),
             )
             .localCheckpoint()
         )
     res = (
-        ranks.join(
-            prev.withColumnsRenamed({"rank": "prev_rank"}), "node"
-        )
+        ranks.join(prev.withColumnsRenamed({"rank": "prev_rank"}), "node")
         .agg(
             F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
             .cast("bigint")
             .alias("residual_units")
         )
     )
-    return ranks.crossJoin(F.broadcast(res)).select(
-        "node", F.col("rank").alias("rank_units"), "residual_units"
-    )
+    return ranks, res
 
 
 # --- product-quantization ANN (PQ codebooks -> ADC scan) -------------------
@@ -2267,66 +2283,11 @@ def graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference basis: extends the §2.B.11 graph family (the reference
     has no graph surface); personalization per Page et al. 1999 §6 /
     Jeh & Widom 2003."""
-    li = load(spark, sf_dir, "lineitem")
-    orders = load(spark, sf_dir, "orders")
-    cust = load(spark, sf_dir, "customer")
-    supp = load(spark, sf_dir, "supplier")
-    nation = load(spark, sf_dir, "nation")
-
-    edges = (
-        li.join(orders, orders.o_orderkey == li.l_orderkey)
-        .join(cust, cust.c_custkey == orders.o_custkey)
-        .join(supp, supp.s_suppkey == li.l_suppkey)
-        .select(
-            F.col("c_nationkey").alias("src"), F.col("s_nationkey").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    edges_deg = edges.join(deg, "src").localCheckpoint()
-    nodes = nation.select(F.col("n_nationkey").alias("node"))
-    seed_col = F.col("node").isin(*PPR_SEEDS)
-    base = F.when(seed_col, F.lit(PR_BASE)).otherwise(F.lit(0))
-
-    ranks = nodes.withColumn(
-        "rank",
-        F.when(seed_col, F.lit(PR_SCALE)).otherwise(F.lit(0)).cast("bigint"),
-    )
-    prev = ranks
-    for _ in range(PR_ITERS):
-        contribs = (
-            edges_deg.join(ranks, edges_deg.src == ranks.node)
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("(85 * (rank div deg)) div 100").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        prev = ranks
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (base + F.coalesce(F.col("c"), F.lit(0)))
-                .cast("bigint")
-                .alias("rank"),
-            )
-            .localCheckpoint()
-        )
-    res = (
-        ranks.join(prev.withColumnsRenamed({"rank": "prev_rank"}), "node")
-        .agg(
-            F.sum(F.abs(F.col("rank") - F.col("prev_rank")))
-            .cast("bigint")
-            .alias("residual_units")
-        )
-    )
+    ranks, res = _trade_pagerank(spark, sf_dir, PPR_SEEDS)
     return ranks.crossJoin(F.broadcast(res)).select(
         "node",
         F.col("rank").alias("rank_units"),
-        seed_col.alias("is_seed"),
+        F.col("node").isin(*PPR_SEEDS).alias("is_seed"),
         "residual_units",
     )
 

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.operators.relational import dsum, money
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.store import memo, scratch_dir
 
 
@@ -602,17 +603,10 @@ def sink_backfill_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_totalprice", F.when(is_p, F.lit(0.0)).otherwise(F.col("o_totalprice"))
     )
     corrupted.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
+    with conf_scope(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         o.filter(is_p).write.mode("overwrite").partitionBy(
             "o_orderstatus"
         ).parquet(out)
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     back = spark.read.parquet(out)
     return (
         back.groupBy("o_orderstatus")

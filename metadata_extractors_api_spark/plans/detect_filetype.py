@@ -175,6 +175,7 @@ def stream_detect_filetype(spark: SparkSession, sf_dir: str) -> DataFrame:
     from metadata_extractors_api_spark.plans.extract_batch import (
         first_extractor,
     )
+    from metadata_extractors_api_spark.streaming.windows import drain
 
     def build() -> str:
         out_dir = scratch_dir("detect_stream_out_")
@@ -228,13 +229,7 @@ def stream_detect_filetype(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ).write.mode("append").parquet(out_dir)
 
-        q = (
-            census.writeStream.foreachBatch(process)
-            .option("checkpointLocation", scratch_dir("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        drain(spark, census.writeStream.foreachBatch(process), partitions=None)
         return out_dir
 
     out_dir = memo(spark, "stream_detect_filetype", build)

@@ -51,11 +51,42 @@ def default_output_path(path: Column) -> Column:
     return F.concat(F.regexp_replace(path, r"\.[^.]+$", ""), F.lit(".json"))
 
 
-def render_command(command: Column, method: Column, values: dict[str, Column]) -> Column:
-    """A8 command templating, python-mode repr quoting, NULL-skip."""
+def render_with_template() -> tuple[Column, Column]:
+    """A8 apply_template_args over the ``template``, ``path``,
+    ``filetype_id``, ``command`` and ``method`` columns: returns
+    (output_path, rendered command). The supported-filetype template
+    override (with falsy fallback) applies to ALL four fields, not just
+    input_type: the override wins unless absent or ''."""
     from metadata_extractors_api_spark.functions.template import template_expr
 
-    return template_expr(command, method, values)
+    def _override(field: str, default: Column | None) -> Column:
+        o = F.nullif(F.try_element_at(F.col("template"), F.lit(field)), F.lit(""))
+        return F.coalesce(o, default) if default is not None else o
+
+    out_path = _override("output_path", default_output_path(F.col("path")))
+    rendered = template_expr(
+        F.col("command"),
+        F.col("method"),
+        {
+            "input_type": _override("input_type", F.col("filetype_id")),
+            "input_path": _override("input_path", F.col("path")),
+            "output_type": _override("output_type", None),  # no local default
+            "output_path": out_path,
+        },
+    )
+    return out_path, rendered
+
+
+def output_row_valid() -> Column:
+    """The extraction output contract for one row: a typed channel
+    from the vocabulary, a point in range, a non-null non-negative
+    value."""
+    return (
+        F.col("value").isNotNull()
+        & (F.col("value") >= 0)
+        & F.col("point").between(0, 4)
+        & F.col("channel").isin("Ewe", "I", "cycle")
+    )
 
 
 def resolve(spark: SparkSession, files: DataFrame, filetypes: DataFrame,
@@ -97,27 +128,7 @@ def resolve(spark: SparkSession, files: DataFrame, filetypes: DataFrame,
         usage.getField("setup").alias("setup"),
         usage.getField("command").alias("command"),
     )
-    # A8/apply_template_args applies the supported-filetype template
-    # override (with falsy fallback) to ALL four fields, not just
-    # input_type -- mirror that: override wins unless absent or ''.
-    def _override(field: str, default: Column | None) -> Column:
-        o = F.nullif(F.try_element_at(F.col("template"), F.lit(field)), F.lit(""))
-        return F.coalesce(o, default) if default is not None else o
-
-    out_path = _override("output_path", default_output_path(F.col("path")))
-    eff_input_type = _override("input_type", F.col("filetype_id"))
-    eff_input_path = _override("input_path", F.col("path"))
-    eff_output_type = _override("output_type", None)  # no local default
-    rendered = render_command(
-        F.col("command"),
-        F.col("method"),
-        {
-            "input_type": eff_input_type,
-            "input_path": eff_input_path,
-            "output_type": eff_output_type,
-            "output_path": out_path,
-        },
-    )
+    out_path, rendered = render_with_template()
     return step4.select(
         "file_id",
         "path",
@@ -286,25 +297,16 @@ def _roundtrip_snapshot(
     """Serialize one registry snapshot as JSON lines (the wire shape
     the reference serves over HTTP, __init__.py:104), re-read it as
     untyped text, and cast it into the declared StructTypes at the
-    boundary (from_json — the scan_registry_json path)."""
+    boundary (from_json — the scan_registry_json path), in the
+    snapshot layout ``registry_fetch.load_snapshot`` reads."""
     import os
 
+    from metadata_extractors_api_spark.sources.registry_fetch import load_snapshot
+
     base = scratch_dir(f"regjson_{tag}_")
-    ft_dir = os.path.join(base, "filetypes")
-    ex_dir = os.path.join(base, "extractors")
-    ft_df.coalesce(1).write.json(ft_dir)
-    ex_df.coalesce(1).write.json(ex_dir)
-    ft2 = (
-        spark.read.text(ft_dir)
-        .select(F.from_json("value", reg.FILETYPES_SCHEMA).alias("e"))
-        .select("e.*")
-    )
-    ex2 = (
-        spark.read.text(ex_dir)
-        .select(F.from_json("value", reg.EXTRACTORS_SCHEMA).alias("e"))
-        .select("e.*")
-    )
-    return ft2, ex2
+    ft_df.coalesce(1).write.json(os.path.join(base, "filetypes"))
+    ex_df.coalesce(1).write.json(os.path.join(base, "extractors"))
+    return load_snapshot(spark, base)
 
 
 @register("extract_dispatch_roundtrip", oracle=_DISPATCH_ORACLE)
@@ -626,13 +628,7 @@ def extract_validate_outputs(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the extraction's own (file, method) key -- no second pass over
     inputs, no driver-side checks."""
     runs = extract_run(spark, sf_dir)
-    ok = (
-        F.col("value").isNotNull()
-        & (F.col("value") >= 0)
-        & F.col("point").between(0, 4)
-        & F.col("channel").isin("Ewe", "I", "cycle")
-    )
-    n_valid = F.sum(ok.cast("int")).cast("bigint")
+    n_valid = F.sum(output_row_valid().cast("int")).cast("bigint")
     n_points = F.count(F.lit(1))
     return runs.groupBy("file_id", "method").agg(
         n_points.alias("n_points"),
@@ -697,17 +693,11 @@ def extract_dead_letter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("file_id", "path", F.lit("no_extractor").alias("reason"))
     )
     runs = extract_run(spark, sf_dir)
-    ok = (
-        F.col("value").isNotNull()
-        & (F.col("value") >= 0)
-        & F.col("point").between(0, 4)
-        & F.col("channel").isin("Ewe", "I", "cycle")
-    )
     invalid = (
         runs.groupBy("file_id")
         .agg(
             F.count(F.lit(1)).alias("n_points"),
-            F.sum(ok.cast("int")).alias("n_valid"),
+            F.sum(output_row_valid().cast("int")).alias("n_valid"),
         )
         .filter(
             (F.col("n_points") != 15) | (F.col("n_valid") != F.col("n_points"))
@@ -815,25 +805,7 @@ def extract_test_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         u.getField("setup").alias("setup"),
         u.getField("command").alias("command"),
     )
-
-    def _override(field: str, default):
-        o = F.nullif(
-            F.try_element_at(F.col("template"), F.lit(field)), F.lit("")
-        )
-        return F.coalesce(o, default) if default is not None else o
-
-    rendered = render_command(
-        F.col("command"),
-        F.col("method"),
-        {
-            "input_type": _override("input_type", F.col("filetype_id")),
-            "input_path": _override("input_path", F.col("path")),
-            "output_type": _override("output_type", None),
-            "output_path": _override(
-                "output_path", default_output_path(F.col("path"))
-            ),
-        },
-    )
+    _, rendered = render_with_template()
     todo = paired.select(
         "extractor_id", "file_id", "method", "setup", rendered.alias("rendered")
     )
@@ -914,6 +886,7 @@ def stream_extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing but the file-source ledger: each batch's work is
     independent, which is what makes this the shape that ingests
     forever on a cluster."""
+    from metadata_extractors_api_spark.streaming.windows import drain
 
     def build() -> str:
         files = reg.files_df(spark)
@@ -939,18 +912,7 @@ def stream_extract_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(stage_dir)
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try:
-            q = (
-                stream.writeStream.foreachBatch(process)
-                .option("checkpointLocation", scratch_dir("ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(spark, stream.writeStream.foreachBatch(process), partitions="16")
         return out_dir
 
     out_dir = memo(spark, ("stream_extract_run", sf_dir), build)

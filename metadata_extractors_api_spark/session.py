@@ -9,8 +9,10 @@ per query.
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -60,3 +62,26 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return b.getOrCreate()
+
+
+@contextlib.contextmanager
+def conf_scope(
+    spark: SparkSession, confs: Mapping[str, str | None]
+) -> Iterator[None]:
+    """Set the session confs in ``confs`` for the body of a ``with``
+    block, then restore each key's previous value, or unset it if it
+    had none. A ``None`` value leaves its key untouched. Restoration
+    also runs when the body raises."""
+    prev: dict[str, str | None] = {}
+    try:
+        for key, value in confs.items():
+            if value is not None:
+                prev[key] = spark.conf.get(key, None)
+                spark.conf.set(key, value)
+        yield
+    finally:
+        for key, value in prev.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)

@@ -215,7 +215,7 @@ def stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch writer (sink_custom_writer), stream writer (this)."""
     from metadata_extractors_api_spark.streaming.windows import (
         _events_stream,
-        _nanos_conf,
+        drain,
     )
 
     memo(
@@ -225,20 +225,11 @@ def stream_custom_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out_dir = scratch_dir("audit_ssink_")
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
-    try:
-        with _nanos_conf(spark):
-            q = (
-                ev.writeStream.format("mdx_audit_stream_sink")
-                .option("path", out_dir)
-                .option("checkpointLocation", scratch_dir("ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        ev.writeStream.format("mdx_audit_stream_sink").option("path", out_dir),
+        partitions="16",
+    )
     shards = []
     for f in sorted(os.listdir(out_dir)):
         if f.startswith("_MANIFEST-"):

@@ -11,25 +11,32 @@ serves the next slice and returns the advanced offset, and
 recovery (the reader contract that makes the source exactly-once).
 
 The fixture feed is finite (the 6 registry files, FEED_BATCH per
-micro-batch); the drain loop stops the query once the sink holds the
-full feed — the streaming-runtime analogue of trigger=availableNow,
-which Python stream sources don't support yet.
+micro-batch); a poll loop over a processing-time trigger stops the
+query once the sink holds the full feed. It does not go through
+``streaming.windows.drain``: on pyspark 4.1.2 a trigger=availableNow
+run of this source ends after ONE batch, serving 3 of the 6 feed rows.
+A query that fails, or a feed that stalls past FEED_TIMEOUT_S, raises
+instead of returning a partial table.
 """
 
 from __future__ import annotations
 
 import time
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+from pyspark.sql.streaming import StreamingQuery
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.sources import registry as reg
 from metadata_extractors_api_spark.store import memo, scratch_dir
 
 FEED_SCHEMA = reg.FILES_SCHEMA
 FEED_BATCH = 3  # rows per micro-batch -> the 6-file fixture drains in 2
+FEED_TIMEOUT_S = 120.0
 
 
 class FileFeedDataSource(DataSource):
@@ -84,9 +91,7 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = spark.readStream.format("mdx_file_feed").load()
     name = "s" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -95,14 +100,33 @@ def stream_custom_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .trigger(processingTime="250 milliseconds")
             .start()
         )
-        deadline = time.time() + 120
-        while (
-            time.time() < deadline
-            and spark.table(name).count() < len(FileFeedReader.ROWS)
-        ):
-            time.sleep(0.25)
-        q.stop()
+        try:
+            _await_feed(
+                q, spark.table(name).count, len(FileFeedReader.ROWS),
+                FEED_TIMEOUT_S,
+            )
+        finally:
+            q.stop()
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name)
+
+
+def _await_feed(
+    q: StreamingQuery, count: Callable[[], int], want: int, timeout_s: float
+) -> None:
+    """Poll until ``count()`` (the sink's rows) reaches ``want``. Raise
+    the query's own exception if it failed, or ``TimeoutError`` naming
+    the rows seen if ``timeout_s`` passes first."""
+    deadline = time.monotonic() + timeout_s
+    while True:
+        err = q.exception()
+        if err is not None:
+            raise err
+        seen = count()
+        if seen >= want:
+            return
+        if time.monotonic() >= deadline:
+            raise TimeoutError(
+                f"mdx_file_feed: {seen} of {want} feed rows after {timeout_s:g} s"
+            )
+        time.sleep(0.25)

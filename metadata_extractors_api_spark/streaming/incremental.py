@@ -40,9 +40,7 @@ from pyspark.sql import functions as F
 from metadata_extractors_api_spark.catalog import load
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.store import memo, scratch_dir
-from metadata_extractors_api_spark.streaming.windows import (
-    stream_shuffle_partitions,
-)
+from metadata_extractors_api_spark.streaming.windows import drain
 
 RESULT_SCHEMA = (
     "doc_a BIGINT, doc_b BIGINT, jaccard DOUBLE, pair_class STRING"
@@ -130,20 +128,7 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(delta_dir)
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", stream_shuffle_partitions()
-        )
-        try:
-            q = (
-                stream.writeStream.foreachBatch(process)
-                .option("checkpointLocation", scratch_dir("ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(spark, stream.writeStream.foreachBatch(process))
         return out_dir
 
     out_dir = memo(spark, ("stream_dedup_incremental", sf_dir), build)

@@ -25,10 +25,7 @@ from pyspark.sql import functions as F
 
 from metadata_extractors_api_spark.registry import register
 from metadata_extractors_api_spark.store import memo, scratch_dir
-from metadata_extractors_api_spark.streaming.windows import (
-    _events_stream,
-    _nanos_conf,
-)
+from metadata_extractors_api_spark.streaming.windows import _events_stream, drain
 
 
 def _state_ckpt(spark: SparkSession, sf_dir: str) -> str:
@@ -39,24 +36,16 @@ def _state_ckpt(spark: SparkSession, sf_dir: str) -> str:
         ckpt = scratch_dir("state_ckpt_")
         ev = _events_stream(spark, sf_dir)
         agg = ev.groupBy("event_type").agg(F.count("*").alias("n"))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        # Pinned at 16 (NOT stream_shuffle_partitions()): the partition
-        # count is part of this module's DECLARED OUTPUT —
-        # stream_state_metadata reports num_partitions from this
-        # checkpoint and its oracle asserts the literal 16.
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try:
-            with _nanos_conf(spark):
-                q = (
-                    agg.writeStream.format("noop")
-                    .outputMode("update")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        # Pinned at 16 (NOT STREAM_PARTITIONS): the partition count is
+        # part of this module's DECLARED OUTPUT — stream_state_metadata
+        # reports num_partitions from this checkpoint and its oracle
+        # asserts the literal 16.
+        drain(
+            spark,
+            agg.writeStream.format("noop").outputMode("update"),
+            partitions="16",
+            checkpoint=ckpt,
+        )
         return ckpt
 
     return memo(spark, ("state_ckpt", sf_dir), build)

@@ -28,8 +28,6 @@ streaming/windows.py docstring for the contract).
 
 from __future__ import annotations
 
-import contextlib
-
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,11 +35,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
 from metadata_extractors_api_spark.registry import register
-from metadata_extractors_api_spark.store import scratch_dir
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.streaming.windows import (
     _events_stream_batched,
     _run_to_table,
-    stream_shuffle_partitions,
 )
 
 try:  # pragma: no cover - present on real cluster images
@@ -53,25 +50,16 @@ except ImportError:
 
 _OUT_SCHEMA = "user_id bigint, n_events bigint, n_types bigint, max_value double"
 
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-@contextlib.contextmanager
-def _rocksdb_conf(spark: SparkSession):
-    """transformWithState requires the RocksDB state store; scope the
-    provider to the drain and restore the session's previous value."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
+#: Session confs a TWS drain runs under: transformWithState requires
+#: the RocksDB state store. The fallback path needs no provider, so the
+#: key is left alone there (``conf_scope`` skips ``None`` values).
+TWS_STATE_CONF = {
+    "spark.sql.streaming.stateStore.providerClass": (
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        if HAS_TWS_DEPS
+        else None
+    )
+}
 
 
 class UserProfileProcessor(StatefulProcessor):
@@ -171,23 +159,22 @@ def stream_profile_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream_batched(spark, sf_dir).select(
         "user_id", "event_type", "value"
     )
-    if HAS_TWS_DEPS:  # pragma: no cover - exercised on cluster images
-        with _rocksdb_conf(spark):
+    with conf_scope(spark, TWS_STATE_CONF):
+        if HAS_TWS_DEPS:  # pragma: no cover - exercised on cluster images
             out = ev.groupBy("user_id").transformWithStateInPandas(
                 UserProfileProcessor(),
                 outputStructType=_OUT_SCHEMA,
                 outputMode="Update",
                 timeMode="None",
             )
-            updates = _run_to_table(out, spark, "update")
-    else:
-        out = ev.groupBy("user_id").applyInPandasWithState(
-            _profile_update,
-            outputStructType=_OUT_SCHEMA,
-            stateStructType="n bigint, vmax double, types array<string>",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+        else:
+            out = ev.groupBy("user_id").applyInPandasWithState(
+                _profile_update,
+                outputStructType=_OUT_SCHEMA,
+                stateStructType="n bigint, vmax double, types array<string>",
+                outputMode="update",
+                timeoutConf="NoTimeout",
+            )
         updates = _run_to_table(out, spark, "update")
     return updates.groupBy("user_id").agg(
         F.max("n_events").alias("n_events"),
@@ -325,8 +312,8 @@ def stream_ewma_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     genuinely exercised; the final emission per key must equal the
     batch EWMA's last row -- stream_ewma's oracle verbatim."""
     ev = _events_stream_batched(spark, sf_dir)
-    with _rocksdb_conf(spark) if HAS_TWS_DEPS else contextlib.nullcontext():
-        updates, _ = _run_to_table_ckpt(_ewma_tws_updates(ev), spark)
+    with conf_scope(spark, TWS_STATE_CONF):
+        updates = _run_to_table(_ewma_tws_updates(ev), spark, "update")
     return _ewma_tws_serve(updates)
 
 
@@ -337,7 +324,7 @@ def _ewma_tws_updates(ev: DataFrame) -> DataFrame:
     identical semantics otherwise). Factored out so the checkpoint-
     restart test can drain it in two separately-started queries
     against one checkpoint. NOTE: the TWS branch needs the caller to
-    hold _rocksdb_conf(spark) while the drain runs."""
+    hold ``conf_scope(spark, TWS_STATE_CONF)`` while the drain runs."""
     keyed = ev.select(
         "event_type", F.expr("unix_micros(ts) div 3600000000").alias("bh")
     ).groupBy("event_type")
@@ -370,31 +357,3 @@ def _ewma_tws_serve(updates: DataFrame) -> DataFrame:
         F.max_by("w_sum", "n_emit").cast("bigint").alias("w_sum"),
     )
 
-
-def _run_to_table_ckpt(stream_df: DataFrame, spark: SparkSession):
-    """_run_to_table variant that also returns the checkpoint path (the
-    state-audit tests read it back through the statestore sources)."""
-    import uuid
-
-    from metadata_extractors_api_spark.streaming.windows import _nanos_conf
-
-    name = "s" + uuid.uuid4().hex[:12]
-    ckpt = scratch_dir("tws_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", stream_shuffle_partitions()
-    )
-    try:
-        with _nanos_conf(spark):
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(name), ckpt

@@ -5,12 +5,17 @@ processing of many files" (README.md:95-96) -- the natural Spark form is
 a file-source stream with event-time windows and watermarks.
 
 Each query replays the events fixture through a real file-source stream
-(trigger=availableNow) into an in-memory sink and returns the final
-batch DataFrame, so the driver can collect rows from a genuinely
-streaming execution. Because availableNow drains the whole fixture, the
-FINAL state of every query here is deterministic and oracle-checked
-against batch SQL (incl. the watermark-drop policy: emitted windows are
-exactly those ending before the final watermark).
+into an in-memory sink and returns the final batch DataFrame, so the
+driver can collect rows from a genuinely streaming execution. Every
+availableNow stream in the package, here and in the streaming/,
+sources/ and plans/ twins, runs through ``drain``: trigger=availableNow
+over a fresh (or caller-owned) checkpoint, with the shuffle-partition
+count and the nanos-as-long parquet read scoped to the query's
+lifetime.
+Because availableNow drains the whole fixture, the FINAL state of every
+query here is deterministic and oracle-checked against batch SQL (incl.
+the watermark-drop policy: emitted windows are exactly those ending
+before the final watermark).
 
 Scale note: state stores partition by group key; watermarks bound state
 size (late data beyond the delay is dropped), so the same topology runs
@@ -19,34 +24,18 @@ continuously on a cluster with bounded memory.
 
 from __future__ import annotations
 
-import contextlib
 import shutil
 import uuid
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.window import Window
 
 from metadata_extractors_api_spark.registry import register
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.store import memo, scratch_dir
-
-
-@contextlib.contextmanager
-def _nanos_conf(spark: SparkSession):
-    """Scope spark.sql.legacy.parquet.nanosAsLong=true to a stream
-    drain (the file source reads the ns-timestamp parquet per
-    micro-batch against the declared BIGINT ts), restoring the previous
-    session value afterwards so it doesn't leak."""
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
-        else:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
 
 EVENTS_SCHEMA_NANOS = (
     "event_id BIGINT, ts BIGINT, user_id BIGINT, event_type STRING, "
@@ -64,7 +53,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The file source needs a declared schema, and the fixture has shipped
     with ts as both TIMESTAMP(NANOS) (stream-read as BIGINT under the
-    nanosAsLong conf scoped to the drain in _run_to_table) and
+    nanosAsLong conf that ``drain`` scopes to every stream) and
     TIMESTAMP(MICROS) (stream-read as TIMESTAMP_NTZ): probe the footer
     with a one-off batch read to pick the matching schema."""
     try:
@@ -185,46 +174,60 @@ def _events_stream_from_dir(
     return reader.load(d)
 
 
-def stream_shuffle_partitions() -> str:
-    """Stateful-stream shuffle/state-store partition count, scoped to
-    each stream's lifetime (a streaming query pins its state
-    partitioning at the first checkpoint, so this is a per-query-run
-    sizing decision, not a session default).
+#: Stateful-stream shuffle/state-store partition count. A streaming
+#: query pins its state partitioning at the first checkpoint, so this
+#: is a per-query-run sizing decision, not a session default. AQE does
+#: not coalesce STREAMING aggregations, so every stateful operator pays
+#: one state-store instance (open + commit + maintenance file I/O) per
+#: partition per micro-batch regardless of data volume. Sized to the
+#: fixtures' keyed state of thousands of keys, where 8 stores already
+#: saturate the commit path (measured at sf0.1: 16 -> 8 cut
+#: stream_scd2_build 4.56->3.19 s, stream_hll_distinct 3.26->2.48 s,
+#: stream_tumbling 1.11->0.83 s, with 4 regressing the pandas-heavy
+#: markov fold: 8 is the local floor, not a magic constant).
+STREAM_PARTITIONS = "8"
 
-    AQE does not coalesce STREAMING aggregations, so every stateful
-    operator pays one state-store instance (open + commit + maintenance
-    file I/O) per partition per micro-batch regardless of data volume.
-    Size it to the keyed-state volume: the fixtures' per-operator state
-    is thousands of keys, where 8 stores already saturate the commit
-    path (measured at sf0.1: 16 -> 8 cut stream_scd2_build 4.56->3.19 s,
-    stream_hll_distinct 3.26->2.48 s, stream_tumbling 1.11->0.83 s,
-    with 4 regressing the pandas-heavy markov fold — 8 is the local
-    floor, not a magic constant). A production deployment sizes this
-    up front via SPARK_GRAFT_STREAM_SHUFFLE to match its key
-    cardinality and executor count."""
-    return os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE", "8")
+
+def drain(
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    partitions: str | None = STREAM_PARTITIONS,
+    checkpoint: str | None = None,
+) -> StreamingQuery:
+    """Run a configured stream writer to completion with
+    trigger=availableNow and return the finished query.
+
+    ``writer`` carries everything specific to the sink (format, query
+    name, output mode, foreachBatch or path); this adds the checkpoint
+    (``checkpoint``, else a new scratch dir) and the trigger. While the
+    query runs, ``spark.sql.shuffle.partitions`` is ``partitions``
+    (``None`` keeps the session value) and
+    ``spark.sql.legacy.parquet.nanosAsLong`` is true, so file sources
+    read ns-timestamp parquet against a declared BIGINT column; both
+    are restored afterwards."""
+    with conf_scope(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": partitions,
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        },
+    ):
+        q = (
+            writer.option("checkpointLocation", checkpoint or scratch_dir("ckpt_"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    return q
 
 
 def _run_to_table(stream_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
-    """Drain the stream into a memory sink and return the result table
-    (shuffle partitions scoped down for the stream's lifetime — see
-    stream_shuffle_partitions)."""
+    """Drain the stream into a memory sink and return the result table."""
     name = "s" + uuid.uuid4().hex[:12]
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", stream_shuffle_partitions())
-    try:
-        with _nanos_conf(spark):
-            q = (
-                stream_df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .option("checkpointLocation", scratch_dir("ckpt_"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    drain(
+        spark,
+        stream_df.writeStream.format("memory").queryName(name).outputMode(mode),
+    )
     return spark.table(name)
 
 
@@ -368,14 +371,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_df.write.mode("overwrite").parquet(os.path.join(out, f"b{batch_id}"))
 
     ev = _events_stream(spark, sf_dir).select("event_id", "event_type", "value")
-    with _nanos_conf(spark):
-        q = (
-            ev.writeStream.foreachBatch(write_batch)
-            .option("checkpointLocation", scratch_dir("ckpt_"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(spark, ev.writeStream.foreachBatch(write_batch), partitions=None)
     back = spark.read.parquet(os.path.join(out, "b*"))
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -508,29 +504,20 @@ def stream_incremental_restart(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink = os.path.join(base, "sink")
     ckpt = os.path.join(base, "ckpt")
 
-    def drain() -> None:
-        q = (
+    def drain_delivery() -> None:
+        drain(
+            spark,
             spark.readStream.schema("doc_id BIGINT, source STRING")
             .parquet(in_dir)
             .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("path", sink),
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", stream_shuffle_partitions()
-    )
-    try:
-        docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(in_dir)
-        drain()
-        docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(in_dir)
-        drain()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    docs.filter(F.col("doc_id") % 2 == 0).write.mode("append").parquet(in_dir)
+    drain_delivery()
+    docs.filter(F.col("doc_id") % 2 == 1).write.mode("append").parquet(in_dir)
+    drain_delivery()
     return spark.read.parquet(sink)
 
 

@@ -21,6 +21,7 @@ def test_stream_single_trigger_batch_invariance(spark, sf_dir, tmp_path):
         _markov_serve,
         _markov_updates,
         _run_to_table,
+        drain,
     )
 
     def drain_batches(single):
@@ -28,15 +29,11 @@ def test_stream_single_trigger_batch_invariance(spark, sf_dir, tmp_path):
             spark, sf_dir, n_files=3, single_trigger=single
         )
         seen = []
-        q = (
-            ev.writeStream.foreachBatch(
-                lambda df, bid: seen.append(int(bid))
-            )
-            .option("checkpointLocation", str(tmp_path / f"ckpt_{single}"))
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark,
+            ev.writeStream.foreachBatch(lambda df, bid: seen.append(int(bid))),
+            checkpoint=str(tmp_path / f"ckpt_{single}"),
         )
-        q.awaitTermination()
         return len(seen)
 
     assert drain_batches(False) == 3

@@ -27,17 +27,18 @@ import pytest
 from pyspark.sql import functions as F
 
 import metadata_extractors_api_spark as mdx
+from metadata_extractors_api_spark.session import conf_scope
 from metadata_extractors_api_spark.streaming.windows import (
     _events_split_dir,
     _events_stream_from_dir,
     _pattern_funnel_serve,
     _pattern_funnel_updates,
+    drain,
 )
 from metadata_extractors_api_spark.streaming.tws import (
-    HAS_TWS_DEPS,
+    TWS_STATE_CONF,
     _ewma_tws_serve,
     _ewma_tws_updates,
-    _rocksdb_conf,
 )
 
 
@@ -60,32 +61,25 @@ def _restart_drain(spark, sf_dir, build_updates, base):
         # copy2 preserves the pinned mtimes the file source orders by
         shutil.copy2(os.path.join(src, name), os.path.join(staged, name))
 
-    def drain(run_id):
+    def drain_run(run_id):
         def sink_batch(df, batch_id):
             df.withColumn("run", F.lit(run_id)).withColumn(
                 "batch_id", F.lit(batch_id)
             ).write.mode("append").parquet(sink)
 
         out = build_updates(_events_stream_from_dir(spark, staged))
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "16")
-        try:
-            q = (
-                out.writeStream.foreachBatch(sink_batch)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        drain(
+            spark,
+            out.writeStream.foreachBatch(sink_batch).outputMode("update"),
+            partitions="16",
+            checkpoint=ckpt,
+        )
 
     stage(chunks[0])
     stage(chunks[1])
-    drain(1)  # two micro-batches, then the query STOPS
+    drain_run(1)  # two micro-batches, then the query STOPS
     stage(chunks[2])
-    drain(2)  # NEW query, same checkpoint: must resume, not replay
+    drain_run(2)  # NEW query, same checkpoint: must resume, not replay
 
     updates = spark.read.parquet(sink)
     per_run = {
@@ -140,12 +134,7 @@ def test_pattern_funnel_state_survives_restart(spark, sf_dir, tmp_path):
 
 
 def test_ewma_tws_state_survives_restart(spark, sf_dir, tmp_path):
-    if HAS_TWS_DEPS:  # pragma: no cover - container lacks protobuf
-        with _rocksdb_conf(spark):
-            updates, b1, b2 = _restart_drain(
-                spark, sf_dir, _ewma_tws_updates, str(tmp_path)
-            )
-    else:
+    with conf_scope(spark, TWS_STATE_CONF):
         updates, b1, b2 = _restart_drain(
             spark, sf_dir, _ewma_tws_updates, str(tmp_path)
         )
@@ -265,28 +254,26 @@ def test_ohlc_state_survives_restart_out_of_order_split(
         os.rename(os.path.join(part_dir, part), dst)
         os.utime(dst, (1_700_000_000 + i * 10,) * 2)
 
-    def drain(run_id):
+    def drain_run(run_id):
         def sink_batch(df, batch_id):
             df.withColumn("run", F.lit(run_id)).withColumn(
                 "batch_id", F.lit(batch_id)
             ).write.mode("append").parquet(sink)
 
         out = _ohlc_updates(_events_stream_from_dir(spark, staged))
-        q = (
-            out.writeStream.foreachBatch(sink_batch)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            spark,
+            out.writeStream.foreachBatch(sink_batch).outputMode("update"),
+            partitions=None,
+            checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     shutil.copy2(os.path.join(base, "ev_000.parquet"),
                  os.path.join(staged, "ev_000.parquet"))
-    drain(1)
+    drain_run(1)
     shutil.copy2(os.path.join(base, "ev_001.parquet"),
                  os.path.join(staged, "ev_001.parquet"))
-    drain(2)
+    drain_run(2)
 
     updates = spark.read.parquet(sink)
     per_run = {

@@ -3,6 +3,10 @@ cross-validation where an equivalent batch plan exists."""
 
 from __future__ import annotations
 
+from types import SimpleNamespace
+
+import pytest
+
 import metadata_extractors_api_spark as mdx
 
 
@@ -154,7 +158,7 @@ def test_state_reader_matches_live_aggregation(spark, sf_dir):
     assert got == want
 
 
-def test_ewma_tws_state_schema_and_multibatch(spark, sf_dir):
+def test_ewma_tws_state_schema_and_multibatch(spark, sf_dir, tmp_path):
     """Round-4 verdict item 8's 'done' gate: the typed-state EWMA twin
     must (a) hash-equal the batch EWMA (covered by the oracle sweep;
     re-asserted here against stream_ewma directly), (b) leave a
@@ -164,22 +168,30 @@ def test_ewma_tws_state_schema_and_multibatch(spark, sf_dir):
     never exercised), and (c) expose the declared state schema through
     the statestore source. Drains through the query's own helpers so
     the checkpoint path is in hand."""
-    from contextlib import nullcontext
-
+    from metadata_extractors_api_spark.session import conf_scope
     from metadata_extractors_api_spark.streaming.tws import (
         HAS_TWS_DEPS,
+        TWS_STATE_CONF,
         _ewma_tws_serve,
         _ewma_tws_updates,
-        _rocksdb_conf,
-        _run_to_table_ckpt,
     )
     from metadata_extractors_api_spark.streaming.windows import (
         _events_stream_batched,
+        drain,
     )
 
     ev = _events_stream_batched(spark, sf_dir)
-    with _rocksdb_conf(spark) if HAS_TWS_DEPS else nullcontext():
-        updates, ckpt = _run_to_table_ckpt(_ewma_tws_updates(ev), spark)
+    ckpt = str(tmp_path / "ckpt")
+    with conf_scope(spark, TWS_STATE_CONF):
+        drain(
+            spark,
+            _ewma_tws_updates(ev)
+            .writeStream.format("memory")
+            .queryName("ewma_tws_updates")
+            .outputMode("update"),
+            checkpoint=ckpt,
+        )
+    updates = spark.table("ewma_tws_updates")
     a = {tuple(r) for r in _ewma_tws_serve(updates).collect()}
     b = {
         tuple(r) for r in mdx.QUERIES["stream_ewma"](spark, sf_dir).collect()
@@ -212,3 +224,60 @@ def test_ewma_tws_state_schema_and_multibatch(spark, sf_dir):
             state.schema["value"].dataType["groupState"].dataType.fieldNames()
         )
         assert {"bhs", "cnts", "n_obs", "n_emit"} <= gs, gs
+
+
+def test_drain_restores_session_confs(spark, sf_dir):
+    """``drain`` scopes the stream partition count and nanosAsLong to
+    the query: the batch sees them, and the session reads what it read
+    before afterwards, also when the query fails."""
+    from pyspark.errors import StreamingQueryException
+
+    from metadata_extractors_api_spark.streaming.windows import (
+        STREAM_PARTITIONS,
+        _events_stream,
+        _run_to_table,
+        drain,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.legacy.parquet.nanosAsLong",
+    )
+    before = {k: spark.conf.get(k, None) for k in keys}
+    assert before["spark.sql.shuffle.partitions"] != STREAM_PARTITIONS
+    ev = _events_stream(spark, sf_dir)
+
+    _run_to_table(ev.groupBy("event_type").count(), spark, "complete")
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+    seen = {}
+
+    def fail(batch_df, _batch_id):
+        seen.update({k: batch_df.sparkSession.conf.get(k, None) for k in keys})
+        raise RuntimeError("sink failed")
+
+    with pytest.raises(StreamingQueryException):
+        drain(spark, ev.writeStream.foreachBatch(fail))
+    assert seen == {
+        "spark.sql.shuffle.partitions": STREAM_PARTITIONS,
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }
+    assert {k: spark.conf.get(k, None) for k in keys} == before
+
+
+def test_stream_custom_source_raises_instead_of_partial_table():
+    """The feed poll re-raises a failed query's exception, and a feed
+    that stalls past the deadline raises TimeoutError naming the rows
+    seen, instead of returning whatever the sink holds."""
+    from metadata_extractors_api_spark.sources.stream_source import _await_feed
+
+    err = RuntimeError("feed failed")
+    failed = SimpleNamespace(exception=lambda: err)
+    with pytest.raises(RuntimeError, match="feed failed"):
+        _await_feed(failed, lambda: 3, 6, timeout_s=60)
+
+    stalled = SimpleNamespace(exception=lambda: None)
+    with pytest.raises(TimeoutError, match="3 of 6"):
+        _await_feed(stalled, lambda: 3, 6, timeout_s=0)
+
+    _await_feed(stalled, lambda: 6, 6, timeout_s=0)  # complete feed returns

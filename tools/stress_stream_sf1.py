@@ -33,7 +33,6 @@ import argparse
 import json
 import os
 import sys
-import tempfile
 import time
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -55,24 +54,17 @@ def _du(path: str) -> int:
 def drain_measured(spark, updates, mode: str) -> dict:
     """Drain an update stream (availableNow) under a fresh checkpoint;
     return per-batch durations + final state rows/bytes."""
-    from metadata_extractors_api_spark.streaming.windows import _nanos_conf
+    from metadata_extractors_api_spark.store import scratch_dir
+    from metadata_extractors_api_spark.streaming.windows import drain
 
-    ckpt = tempfile.mkdtemp(prefix="mdx_sf1_ckpt_")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    ckpt = scratch_dir("sf1_ckpt_")
     t0 = time.perf_counter()
-    try:
-        with _nanos_conf(spark):
-            q = (
-                updates.writeStream.format("noop")
-                .outputMode(mode)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    q = drain(
+        spark,
+        updates.writeStream.format("noop").outputMode(mode),
+        partitions="16",
+        checkpoint=ckpt,
+    )
     wall = time.perf_counter() - t0
     progress = [json.loads(p.json) for p in q.recentProgress]
     batches = [
